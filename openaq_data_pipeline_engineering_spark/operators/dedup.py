@@ -52,10 +52,11 @@ def dedup_first(
     if not tiebreaker:
         raise ValueError("dedup_first requires a deterministic tiebreaker")
     if total_tiebreaker and all(isinstance(c, str) for c in tiebreaker):
-        others = [
+        # keys are constant within a group: packing one that is also a
+        # tiebreaker would select it twice
+        packed = [c for c in tiebreaker if c not in keys] + [
             c for c in df.columns if c not in keys and c not in tiebreaker
         ]
-        packed = list(tiebreaker) + others
         agg = df.groupBy(*keys).agg(
             F.min(F.struct(*packed)).alias("__first")
         )

@@ -8,12 +8,17 @@ a listed future item (doc/architecture.md:697).
 
 Spark-native replacement, no table format required:
 
-1. restrict to the Hive partitions the new batch touches (partition
-   pruning — reads only those partitions of the existing mart);
-2. union existing + new, window-dedup with the batch's tiebreaker so a
-   re-delivered or corrected row wins deterministically;
+1. collect the (year, month, day) values the new batch touches on the
+   driver (a handful of rows) and read only those partitions of the
+   existing mart, by a static partition filter: the scan prunes them at
+   plan time and opens no file of any other partition;
+2. union existing + new, hash them on the partition columns, and
+   window-dedup with the batch's tiebreaker so a re-delivered or
+   corrected row wins deterministically — the dedup's window and the
+   write share that one exchange;
 3. write back with dynamic partitionOverwriteMode — only the touched
-   partitions are replaced, atomically per partition.
+   partitions are replaced. Spark replaces each one by delete, then
+   rename: a crash between the two loses that partition.
 
 Cost at 100 TB: proportional to the touched partitions (a day or two),
 never the whole table. With Delta/Iceberg the same logic is a MERGE; the
@@ -22,6 +27,7 @@ operator keeps that seam (`merge_into_mart` is the single entry point).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,9 +36,47 @@ from openaq_data_pipeline_engineering_spark.operators.dedup import dedup_first
 PARTITION_COLS = ["year", "month", "day"]
 
 
-def touched_partitions(batch: DataFrame) -> DataFrame:
-    """Distinct (year, month, day) the batch writes into — a tiny frame."""
-    return batch.select(*PARTITION_COLS).distinct()
+def touched_partitions(batch: DataFrame) -> list[tuple]:
+    """Distinct (year, month, day) the batch writes into, on the driver."""
+    return [tuple(r) for r in batch.select(*PARTITION_COLS).distinct().collect()]
+
+
+def merged_partitions(
+    spark: SparkSession,
+    mart_path: str,
+    batch: DataFrame,
+    keys: list[str],
+    tiebreaker: list,
+) -> DataFrame:
+    """The rows :func:`merge_into_mart` writes: the batch's touched
+    partitions of the mart at ``mart_path`` with ``batch`` merged in,
+    hash-partitioned on :data:`PARTITION_COLS` (arguments as there)."""
+    keys = list(keys) + [c for c in PARTITION_COLS if c not in keys]
+    merged = batch
+    try:
+        # Explicit schema (the batch's) on the read: without it Spark
+        # type-INFERS partition values, turning the zero-padded string
+        # partitions ("01") into ints (1); the rewrite would then land
+        # in different directories (month=1 next to month=01) and the
+        # old files would survive — silent duplication.
+        existing = spark.read.schema(batch.schema).parquet(mart_path)
+    except AnalysisException as e:
+        # the first merge creates the mart; any other read failure
+        # must not pass for an empty mart, whose touched partitions
+        # the write below would then replace with the batch alone
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+    else:
+        in_touched = F.lit(False)
+        for part in touched_partitions(batch):
+            in_part = F.lit(True)
+            for c, v in zip(PARTITION_COLS, part):
+                in_part &= F.col(c).eqNullSafe(v)
+            in_touched |= in_part
+        merged = existing.where(in_touched).unionByName(batch)
+    return dedup_first(
+        merged.repartition(*PARTITION_COLS), keys=keys, tiebreaker=tiebreaker
+    )
 
 
 def merge_into_mart(
@@ -40,7 +84,7 @@ def merge_into_mart(
     mart_path: str,
     batch: DataFrame,
     keys: list[str],
-    tiebreaker: list[str],
+    tiebreaker: list,
 ) -> None:
     """Idempotently merge ``batch`` (already in mart schema, partition
     columns included) into the partitioned mart at ``mart_path``.
@@ -53,36 +97,19 @@ def merge_into_mart(
     identity is unenforceable under the partition-pruned read, and a
     partition-less key with a non-total tiebreaker would silently make
     the surviving row partition-layout-dependent (the r12
-    ``incremental_mart_merge`` determinism bug).
+    ``incremental_mart_merge`` determinism bug). So a correction that
+    moves a row to another partition (e.g. a fixed timestamp that
+    shifts its day) leaves the stale row in the old partition: the
+    caller must delete it explicitly.
     ``tiebreaker``: ordering; the FIRST row per key under this order
     survives — include a batch/extraction timestamp descending to make
     re-delivered corrections win.
+
+    Raises whatever reading the mart raises, except that a mart that
+    does not exist yet is created from the batch.
     """
-    keys = list(keys) + [c for c in PARTITION_COLS if c not in keys]
-    try:
-        # Explicit schema (the batch's) on the read: without it Spark
-        # type-INFERS partition values, turning the zero-padded string
-        # partitions ("01") into ints (1); the rewrite would then land
-        # in different directories (month=1 next to month=01) and the
-        # old files would survive — silent duplication.
-        existing = spark.read.schema(batch.schema).parquet(mart_path)
-        has_existing = True
-    except Exception:
-        has_existing = False
-
-    if has_existing:
-        parts = touched_partitions(batch)
-        # partition-pruned read of only the affected partitions:
-        # a broadcast semi-join against partition VALUES prunes at plan
-        # time because year/month/day are partition columns of the scan
-        affected = existing.join(F.broadcast(parts), PARTITION_COLS, "left_semi")
-        merged = affected.unionByName(batch)
-    else:
-        merged = batch
-
-    deduped = dedup_first(merged, keys=keys, tiebreaker=tiebreaker)
     (
-        deduped.repartition(*PARTITION_COLS)
+        merged_partitions(spark, mart_path, batch, keys, tiebreaker)
         .write.mode("overwrite")
         # writer-level option, NOT session conf: on a session with
         # static overwrite mode this write would otherwise truncate

@@ -8,10 +8,15 @@ with 5 eager count() actions re-scanning the source every time.
 
 Engine differences (each a deliberate scale fix):
 - ONE job: metrics ride on ``observe`` instead of 4 extra count() scans.
+- ONE pass over the raw input and ONE exchange, hashed on the location
+  key: the dedup, the pivot and the dim extraction are a single
+  aggregate (first reading per cell by the tiebreaker, an explicit
+  pivot value list → no distinct-scan pre-job, frozen schema) and a
+  window on the key for the location attributes. The reference's
+  second derivation of the dim from the raw frame, and the join that
+  brings it back, are gone.
 - Deterministic dedup tiebreaker (reference orders by the partition key
   itself → nondeterministic survivor).
-- Explicit pivot value list → no distinct-scan pre-job, frozen schema.
-- Explicit ``F.broadcast`` on the dim join → no fact-side shuffle.
 - Write repartitions by the OUTPUT partition columns (year, month, day)
   so each Hive partition is written by as few tasks as possible (the
   reference repartitions by location_id, which sprays every task across
@@ -22,17 +27,14 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from openaq_data_pipeline_engineering_spark.operators.dedup import dedup_first
-from openaq_data_pipeline_engineering_spark.operators.enrich import enrich_metadata, extract_location_dim
 from openaq_data_pipeline_engineering_spark.operators.parse import (
     drop_invalid_datetime,
     parse_datetime,
     with_partition_columns,
 )
-from openaq_data_pipeline_engineering_spark.operators.pivot import pivot_parameters
 
 DEFAULT_PARAMETERS = ["pm25", "pm10", "no2", "so2", "o3", "co", "bc"]
 
@@ -69,38 +71,56 @@ class MartConfig:
 
 
 def build_mart(raw: DataFrame, cfg: MartConfig) -> DataFrame:
-    """Long measurements → wide mart DataFrame (unwritten logical plan)."""
+    """Long measurements → wide mart DataFrame (unwritten logical plan).
+
+    One pass over ``raw`` and one exchange, hashed on ``cfg.key``; the
+    aggregate's groups and the location window both cluster on it.
+
+    - A parameter cell is the ``value`` (a double) of that (key, ts,
+      parameter)'s first reading by ``cfg.tiebreaker``, ascending, nulls
+      first: ``min(when(parameter = v, struct(*tiebreaker, value)))``,
+      rounded to ``value_decimals`` when set. That is ``dedup_first``'s
+      rank-1 row under ``pivot_parameters``' mean of one reading.
+    - The location attributes are those of the key's first reading by
+      (ts, *tiebreaker), the survivor ``extract_location_dim`` picks:
+      ``min(struct(ts, *tiebreaker, *attrs))`` per group, then over a
+      window on the key. Where readings tie on (ts, *tiebreaker) with
+      differing attributes, that window dedup kept an arbitrary one;
+      this keeps the least. A null key gets none, as under the left
+      join this replaces.
+    """
     df = raw
     if cfg.ts_is_string:
         df = parse_datetime(df, cfg.ts)
         df = drop_invalid_datetime(df, cfg.ts)
-    df = with_partition_columns(df, cfg.ts)
+    df = with_partition_columns(df, cfg.ts).repartition(cfg.key)
 
-    tiebreak = cfg.tiebreaker or [cfg.value]
-    deduped = dedup_first(
-        df,
-        keys=[cfg.key, cfg.ts, cfg.parameter],
-        tiebreaker=tiebreak,
-    )
-
-    wide = pivot_parameters(
-        deduped,
-        group_keys=[cfg.key, cfg.ts, "year", "month", "day"],
-        pivot_col=cfg.parameter,
-        value_col=cfg.value,
-        values=cfg.parameters,
-        value_decimals=cfg.value_decimals,
-    )
-
+    # positional field names: the value column may also be a tiebreaker
+    tiebreak = [
+        F.col(c).alias(f"__t{i}") for i, c in enumerate(cfg.tiebreaker or [cfg.value])
+    ]
+    reading = F.struct(*tiebreak, F.col(cfg.value).alias("value"))
+    aggs = []
+    for v in cfg.parameters:
+        cell = F.min(F.when(F.col(cfg.parameter) == v, reading))["value"]
+        if cfg.value_decimals is not None:
+            cell = F.round(cell, cfg.value_decimals)
+        aggs.append(cell.alias(v))
     if cfg.metadata:
-        dim = extract_location_dim(
-            df,
-            key=cfg.key,
-            attrs=cfg.metadata,
-            tiebreaker=[cfg.ts] + tiebreak,
-        )
-        wide = enrich_metadata(wide, dim, key=cfg.key, fills=cfg.fills)
-    return wide
+        attrs = [F.col(src).alias(dst) for src, dst in cfg.metadata.items()]
+        located = F.struct(F.col(cfg.ts).alias("__ts"), *tiebreak, *attrs)
+        aggs.append(F.min(located).alias("__loc"))
+    group = [cfg.key, cfg.ts, "year", "month", "day"]
+    wide = df.groupBy(*group).agg(*aggs)
+    if not cfg.metadata:
+        return wide
+
+    loc = F.min("__loc").over(Window.partitionBy(cfg.key))
+    wide = wide.withColumn("__loc", F.when(F.col(cfg.key).isNotNull(), loc))
+    loc_attrs = [F.col("__loc")[c].alias(c) for c in cfg.metadata.values()]
+    wide = wide.select(*group, *cfg.parameters, *loc_attrs)
+    fills = {c: v for c, v in cfg.fills.items() if c in wide.columns}
+    return wide.fillna(fills) if fills else wide
 
 
 def write_mart(

@@ -105,8 +105,11 @@ def bloom_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct (source, doc_id) set is pinned once and feeds the bloom
     # build AND the membership label join — bloom membership over the
     # distinct set is identical to membership over the raw rows, and
-    # previously each consumer re-scanned documents.
-    keyset = docs.distinct().localCheckpoint(eager=True)
+    # previously each consumer re-scanned documents. Persisted, not
+    # localCheckpointed: the blocks are released once the (one row per
+    # source) answer is on the driver.
+    keyset = docs.distinct().persist()
+    keyset.count()
     bloom = bloom_build(keyset, "source", "doc_id")
     probes = local_rows(spark,
         [(k,) for k in _PROBES], "doc_id bigint"
@@ -120,7 +123,7 @@ def bloom_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled = hits.join(
         F.broadcast(members), on=["group", "doc_id"], how="left"
     ).withColumn("is_member", F.coalesce("is_member", F.lit(False)))
-    return (
+    result = (
         labeled.groupBy(F.col("group").alias("source"))
         .agg(
             F.sum(F.when(F.col("is_member"), 1).otherwise(0))
@@ -136,6 +139,9 @@ def bloom_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_nonmember_hits"),
         )
     )
+    rows = result.collect()
+    keyset.unpersist()
+    return local_rows(spark, rows, result.schema)
 
 
 assert M_BITS % WORD_BITS == 0

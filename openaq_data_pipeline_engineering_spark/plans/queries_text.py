@@ -481,7 +481,8 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL → row dropped). Each marker score now appears ONCE in the
     # predicate, so inlining is harmless wherever the Filter lands.
     # (first-arm equivalence requires 'en' to LEAD the tie-break order)
-    assert LANG_ORDER[0] == "en"
+    if LANG_ORDER[0] != "en":
+        raise RuntimeError(f"language gate assumes 'en' leads {LANG_ORDER}")
     sc = lang_scores("text")
     wc_d = whitespace_token_count("text").cast("double")
     gated = (

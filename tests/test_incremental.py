@@ -83,3 +83,41 @@ def test_untouched_partitions_not_rewritten(spark, tmp_path):
     back = spark.read.parquet(path)
     assert back.count() == 3
     assert back.filter("day = '02'").count() == 2
+
+
+def _files(path):
+    import os
+
+    return {
+        os.path.join(d, f): (os.path.getsize(os.path.join(d, f)),
+                             os.path.getmtime(os.path.join(d, f)))
+        for d, _dirs, fs in os.walk(path)
+        for f in fs
+    }
+
+
+def test_read_failure_raises_and_leaves_mart_unchanged(spark, tmp_path, monkeypatch):
+    """Only a mart that is not there yet may be read as empty: any other
+    read failure must stop the merge before it rewrites a partition with
+    the batch's rows alone."""
+    import pytest
+    from pyspark.sql import DataFrameReader
+
+    path = str(tmp_path / "mart3")
+    merge_into_mart(
+        spark, path,
+        _batch(spark, [_row("a", 1, 10, 1.0, "t1"), _row("b", 1, 10, 2.0, "t1")]),
+        KEYS, _tie(),
+    )
+    before = _files(path)
+    batch = _batch(spark, [_row("a", 1, 11, 3.0, "t2")])
+
+    def unreadable(self, *paths, **options):
+        raise OSError("injected: mart unreadable")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
+    with pytest.raises(OSError, match="injected"):
+        merge_into_mart(spark, path, batch, KEYS, _tie())
+    monkeypatch.undo()
+    assert _files(path) == before
+    assert spark.read.parquet(path).count() == 2

@@ -8,6 +8,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from openaq_data_pipeline_engineering_spark.observability import execute_with_metrics
+from openaq_data_pipeline_engineering_spark.plans.incremental import merged_partitions
 from openaq_data_pipeline_engineering_spark.plans.mart import MartConfig, build_mart, write_mart
 
 
@@ -190,3 +192,33 @@ def test_example_similarity_runs(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert proc.stdout.count("--") >= 5
+
+
+def test_build_mart_plan_is_one_scan_one_exchange(spark, tmp_path):
+    """The raw input is scanned once, no dim join is planned, and the
+    only exchange is the one hashed on the key (the writer adds its
+    own on the partition columns)."""
+    raw = str(tmp_path / "raw")
+    measurements(spark).write.json(raw)
+    mart = build_mart(spark.read.schema(measurements(spark).schema).json(raw),
+                      MartConfig(tiebreaker=["value"]))
+    names = [nm.node for nm in execute_with_metrics(mart)[1]]
+    assert [n for n in names if n.startswith("Scan")] == ["Scan json "]
+    assert not [n for n in names if "BroadcastHashJoin" in n]
+    assert names.count("Exchange") == 1
+
+
+def test_merge_reads_only_touched_partitions(spark, tmp_path):
+    """The merge's Parquet scan opens the partitions the batch touches
+    and no other."""
+    mart = build_mart(measurements(spark), MartConfig(tiebreaker=["value"]))
+    out = str(tmp_path / "mart")
+    # a second day partition, which the batch below does not touch
+    write_mart(mart.union(mart.withColumn("day", F.lit("21"))), out)
+    assert len(os.listdir(os.path.join(out, "year=2025", "month=12"))) == 2
+    batch = mart.where("location_id = 'loc1'")  # day 20 only
+    _n, nodes = execute_with_metrics(
+        merged_partitions(spark, out, batch, ["location_id", "datetime"], ["pm25"])
+    )
+    scans = [nm.metrics for nm in nodes if nm.node.startswith("Scan parquet")]
+    assert [m["number of partitions read"] for m in scans] == [1]

@@ -57,3 +57,23 @@ def test_dedup_first_struct_min_removes_window_from_plan(spark):
     )
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
+
+
+def test_dedup_first_struct_min_key_in_tiebreaker(spark):
+    """A key column that is also a tiebreaker is constant within its
+    group: the struct-min path packs it once and returns the window
+    path's rows, columns in input order."""
+    from openaq_data_pipeline_engineering_spark.operators.dedup import (
+        dedup_first,
+    )
+
+    df = spark.createDataFrame(
+        [(1, 5, "x"), (1, 3, "y"), (2, 9, "z")], "k int, id int, tag string"
+    )
+    keys, tb = ["k"], ["k", "id"]
+    fast = dedup_first(df, keys=keys, tiebreaker=tb, total_tiebreaker=True)
+    slow = dedup_first(df, keys=keys, tiebreaker=tb)
+    assert fast.columns == slow.columns == df.columns
+    assert sorted(map(tuple, fast.collect())) == sorted(
+        map(tuple, slow.collect())
+    ) == [(1, 3, "y"), (2, 9, "z")]
