@@ -45,8 +45,9 @@ the new version untouched. This module is that write path:
    ordinary manifest CAS with ``expected_latest`` pinned to the base
    version, so concurrent statements keep Delta's conflict semantics.
 
-Eligibility (callers fall back to the full-rewrite publish when any
-fails; the result is identical, only the write amplification differs):
+Eligibility (:func:`commit_rewrite` falls back to the full-rewrite
+publish when any fails; the result is identical, only the write
+amplification differs):
 the base version must be a FULL, locally-materialized snapshot with a
 CONSISTENT layout — flat, or Hive-partitioned with one partition-column
 sequence shared by every data file (VERDICT r10 #1: a carried file's
@@ -1027,7 +1028,8 @@ def commit_file_rewrite(
 ) -> int:
     """Publish a new version whose content is ``rewritten`` (the
     statement's lowering over the touched files) plus every OTHER data
-    file of version ``base``, carried by hardlink. Commits with
+    file of version ``base``, carried as an entry in the new version's
+    fileset sidecar (no copy, no link). Commits with
     ``expected_latest=base`` — a concurrent commit raises
     :class:`versioned.ConcurrentWriteError` and this writer's directory
     is cleaned up (its content is derivable, nothing is lost).
@@ -1421,11 +1423,107 @@ def commit_file_rewrite(
     return version
 
 
+# Attempts of the optimistic statement loop (Delta's statement retry):
+# a writer that keeps losing the commit race runs its statement this
+# many times against the latest version, then surfaces
+# ConcurrentWriteError. A failed streaming micro-batch replays
+# idempotently from its checkpoint, so the stream needs no more.
+COMMIT_ATTEMPTS = 3
+
+
+def commit_rewrite(
+    spark: SparkSession,
+    root: str,
+    lower,
+    discover=None,
+    conflict_rescan=None,
+    txn_id: str | None = None,
+) -> tuple[int, int]:
+    """The optimistic copy-on-write commit loop every row-level writer
+    shares (streaming upsert, path-target UPDATE/DELETE and MERGE).
+    Returns ``(version, base_version)``.
+
+    Each attempt reads the latest version and, when ``discover`` is
+    given, zero-copy-rebases it to a COW-eligible base
+    (:func:`ensure_cow_base`). ``discover(vdir)`` names the base's
+    files the statement can touch (None: unsafe to evaluate twice).
+    ``lower(target)`` runs the statement over the touched subset
+    (empty when nothing is touched) and the result commits through
+    :func:`commit_file_rewrite` with ``conflict_rescan``. Any
+    ineligibility — no ``discover``, no COW base, unsafe discovery, a
+    type-changing lowering — takes the identical-result full publish
+    instead: ``lower`` over the whole snapshot (None on an empty
+    root), committed with ``expected_latest`` pinned to the base. A
+    ``ConcurrentWriteError`` re-runs the attempt, up to
+    :data:`COMMIT_ATTEMPTS`.
+
+    No-op shape (Delta's): a statement that touches no file and whose
+    lowering adds no row commits nothing and returns the base version.
+    A ``txn_id`` commit always lands, because its txn entry is what
+    makes a replay of the same micro-batch a no-op.
+    """
+    from openaq_data_pipeline_engineering_spark.operators.filesets import (
+        read_version_dir,
+    )
+    from openaq_data_pipeline_engineering_spark.operators.versioned import (
+        ConcurrentWriteError,
+        read_snapshot,
+        snapshot_versions,
+        write_snapshot,
+    )
+
+    for _ in range(COMMIT_ATTEMPTS):
+        versions = snapshot_versions(root)
+        base = versions[-1] if versions else 0
+        try:
+            cow_base = (
+                ensure_cow_base(spark, root)
+                if discover is not None and versions
+                else None
+            )
+            if cow_base is not None:
+                base = cow_base
+                vdir = resolve_base_dir(root, base)
+                touched = discover(vdir)
+                if touched is not None:
+                    # schema-pinned basePath read: partitioned bases
+                    # keep their key=value partition columns
+                    base_df = read_version_dir(spark, vdir)
+                    partial = lower(
+                        read_touched_subset(
+                            spark, vdir, touched, base_df.schema
+                        )
+                        if touched
+                        else base_df.limit(0)
+                    )
+                    if schema_preserved(base_df, partial):
+                        if not touched and txn_id is None and partial.isEmpty():
+                            return base, base
+                        version = commit_file_rewrite(
+                            spark,
+                            root,
+                            base,
+                            partial,
+                            touched,
+                            txn_id=txn_id,
+                            conflict_rescan=conflict_rescan,
+                        )
+                        return version, base
+            full = read_snapshot(spark, root, version=base) if versions else None
+            version = write_snapshot(
+                lower(full), root, txn_id=txn_id, expected_latest=base
+            )
+            return version, base
+        except ConcurrentWriteError as e:
+            err = e
+    raise err
+
+
 def _carry_manifest(spark: SparkSession, vdir_base: str, new_dir: str) -> None:
     """Maintain the persisted skipstats manifest ACROSS a COW commit
     (VERDICT r10 #4): when the base version carries one, the new
     version gets a manifest too — carried files' stats rows copy
-    forward verbatim (a hardlinked file keeps its content AND its rel
+    forward verbatim (a carried entry keeps its content AND its rel
     path), and only the files NOT inherited by rel path (the rewritten
     files, plus any collision-renamed carry) get fresh stats from one
     scan bounded to exactly those files. Maintenance cost O(touched),

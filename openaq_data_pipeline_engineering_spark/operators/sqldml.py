@@ -23,8 +23,6 @@ row mutation needs.
 
 from __future__ import annotations
 
-from openaq_data_pipeline_engineering_spark.localrel import local_rows
-
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +31,7 @@ from pyspark.sql import functions as F
 from openaq_data_pipeline_engineering_spark.operators.sqlmerge import (
     MergeError,
     _mask_literals,
+    _path_statement_row,
     _split_top,
     _unqualify,
 )
@@ -162,8 +161,10 @@ def _statement_alias_where(
 
 
 def _execute_dml_on_root(spark: SparkSession, sql: str, pm, lowering, where_re):
-    """Shared path-target wrapper: read latest, lower, commit with the
-    optimistic guard, return one footer-derived metrics row.
+    """Shared path-target wrapper: lower the statement over the latest
+    version and commit it through the shared copy-on-write loop
+    (:func:`cow.commit_rewrite`); returns one footer-derived metrics
+    row.
 
     FILE-GRANULAR copy-on-write (operators/cow.py): when the statement
     has a WHERE and the latest version is (or can be zero-copy-rebased
@@ -172,30 +173,28 @@ def _execute_dml_on_root(spark: SparkSession, sql: str, pm, lowering, where_re):
     #1: touched rows republish through partitionBy, untouched files
     carry at their key=value subpaths) — the lowering runs over ONLY
     the files holding matching rows; every other file is carried into
-    the new version by hardlink, so bytes written ∝ touched files, not
-    table size (Delta's UPDATE/DELETE write shape). Any ineligibility
-    — no WHERE, mixed flat/partitioned base, a type-changing SET —
-    falls back to the identical-result full-snapshot publish.
+    the new version as a fileset sidecar entry, so bytes written ∝
+    touched files, not table size (Delta's UPDATE/DELETE write shape).
+    Any ineligibility — no WHERE, mixed flat/partitioned base, a
+    type-changing SET — falls back to the identical-result
+    full-snapshot publish. A WHERE matching no file commits nothing
+    (Delta's no-op DML shape, ADVICE r10 #4): the row keeps its shape
+    with version == base_version.
 
     CONFLICT RETRY (Delta parity): a concurrent commit between the
     statement's read and its conditional publish conflicts; the
-    statement re-reads the new latest and re-executes, up to 3
-    attempts, then surfaces :class:`versioned.ConcurrentWriteError` —
-    re-executing against latest is exactly the serializable outcome."""
-    import os
-
+    statement re-reads the new latest and re-executes, up to
+    :data:`cow.COMMIT_ATTEMPTS` attempts, then surfaces
+    :class:`versioned.ConcurrentWriteError` — re-executing against
+    latest is exactly the serializable outcome."""
     from openaq_data_pipeline_engineering_spark.operators.cow import (
-        commit_file_rewrite,
-        ensure_cow_base,
-        read_touched_subset,
+        commit_rewrite,
         schema_preserved,
         touched_files_by_predicate,
     )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
-        ConcurrentWriteError,
         read_snapshot,
         snapshot_versions,
-        write_snapshot,
     )
 
     # pm matched the literal-MASKED text (the quoted path is a string
@@ -211,125 +210,46 @@ def _execute_dml_on_root(spark: SparkSession, sql: str, pm, lowering, where_re):
         + sql[pm.end("path") + 1 :]
     )
     alias, where = _statement_alias_where(rewritten, where_re)
-    new_v: int | None = None
-    for attempt in range(3):
-        versions = snapshot_versions(root)
-        if not versions:
-            raise MergeError(
-                f"{root!r} has no committed versions; path-target DML "
-                "needs an existing versioned table (INSERT OVERWRITE "
-                "creates one)"
-            )
-        base = versions[-1]
-        try:
-            if where is not None:
-                # ADVICE r10 #3: probe the lowering's schema on a
-                # zero-row frame BEFORE ensure_cow_base — a
-                # type-changing SET falls back to the full rewrite
-                # anyway, so don't pay (and commit) a zero-copy rebase
-                # of a chain/restore base for it. Analysis-only: no
-                # job runs over the limit(0) frame.
-                latest_df = read_snapshot(spark, root, version=base)
-                probe = lowering(
-                    spark, rewritten, target_df=latest_df.limit(0)
-                )
-                cow_base = (
-                    ensure_cow_base(spark, root)
-                    if schema_preserved(latest_df, probe)
-                    else None
-                )
-                if cow_base is not None:
-                    base = cow_base
-                    from openaq_data_pipeline_engineering_spark.operators.cow import (
-                        resolve_base_dir,
-                    )
-                    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-                        read_version_dir,
-                    )
-
-                    # local v=N, or the clone-referenced source dir —
-                    # the fileset carry references either (r12)
-                    vdir = resolve_base_dir(root, cow_base)
-                    base_df = read_version_dir(spark, vdir)
-                    # None = predicate unsafe to evaluate twice
-                    # (non-deterministic / per-query time fns, ADVICE
-                    # r10 #1) -> single-evaluation full rewrite below
-                    touched = touched_files_by_predicate(
-                        spark, vdir, where, alias=alias
-                    )
-                    if touched == []:
-                        # ZERO files matched: Delta's no-op DML shape
-                        # (ADVICE r10 #4) — return the current version
-                        # WITHOUT committing (no version churn, no
-                        # empty CDF sidecar); the metrics row keeps its
-                        # shape with version == base_version.
-                        new_v = cow_base
-                    elif touched is not None:
-                        # schema-pinned basePath read: partitioned
-                        # bases keep their key=value partition columns
-                        # (and the full directory's inferred types)
-                        subset = read_touched_subset(
-                            spark, vdir, touched, base_df.schema
-                        )
-                        partial = lowering(
-                            spark, rewritten, target_df=subset
-                        )
-                        if schema_preserved(base_df, partial):
-                            # Conflict-resolution probe (r12): on a
-                            # lost CAS race the commit may logically
-                            # rebase onto the winner iff none of the
-                            # winner's ADDED rows match this WHERE —
-                            # exact, deterministic (plan_is_cow_safe
-                            # already gated discovery), NULL = no
-                            # match like the lowering itself.
-                            def _rescan(
-                                df, _w=where, _a=alias
-                            ) -> bool:
-                                d = df.alias(_a) if _a else df
-                                return bool(
-                                    d.filter(F.expr(_w)).take(1)
-                                )
-
-                            new_v = commit_file_rewrite(
-                                spark,
-                                root,
-                                cow_base,
-                                partial,
-                                touched,
-                                conflict_rescan=_rescan,
-                            )
-            if new_v is None:
-                df = read_snapshot(spark, root, version=base)
-                result = lowering(spark, rewritten, target_df=df)
-                # Constraints are enforced and the optimistic guard
-                # checked by the commit itself.
-                new_v = write_snapshot(result, root, expected_latest=base)
-            break
-        except ConcurrentWriteError:
-            if attempt == 2:
-                raise
-    assert new_v is not None
-    import pyarrow.parquet as pq
-
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        version_data_files,
-    )
-
-    def _rows(version: int) -> int:
-        # DATA files only: on a CDF-enabled root the new version also
-        # holds a _changes sidecar, whose rows must not count into the
-        # statement's n_rows (Spark reads of the directory ignore it).
-        # Fileset-aware: a COW commit's carried rows live in its owner
-        # versions' files, resolved through the sidecar.
-        return sum(
-            pq.ParquetFile(p).metadata.num_rows
-            for p in version_data_files(os.path.join(root, f"v={version}"))
+    if not snapshot_versions(root):
+        raise MergeError(
+            f"{root!r} has no committed versions; path-target DML "
+            "needs an existing versioned table (INSERT OVERWRITE "
+            "creates one)"
         )
 
-    return local_rows(spark, 
-        [(int(new_v), int(_rows(new_v)), int(base))],
-        "version int, n_rows bigint, base_version int",
+    def lower(target):
+        return lowering(spark, rewritten, target_df=target)
+
+    discover = rescan = None
+    # ADVICE r10 #3: probe the lowering's schema on a zero-row frame
+    # BEFORE the loop's ensure_cow_base — a type-changing SET falls back
+    # to the full rewrite anyway, so don't pay (and commit) a zero-copy
+    # rebase of a chain/restore base for it. Analysis-only: no job runs
+    # over the limit(0) frame.
+    if where is not None:
+        latest_df = read_snapshot(spark, root)
+        if schema_preserved(latest_df, lower(latest_df.limit(0))):
+            # None = predicate unsafe to evaluate twice (non-
+            # deterministic / per-query time fns, ADVICE r10 #1) ->
+            # single-evaluation full rewrite
+            def discover(vdir):
+                return touched_files_by_predicate(
+                    spark, vdir, where, alias=alias
+                )
+
+            # Conflict-resolution probe (r12): on a lost CAS race the
+            # commit may logically rebase onto the winner iff none of
+            # the winner's ADDED rows match this WHERE — exact,
+            # deterministic (plan_is_cow_safe already gated discovery),
+            # NULL = no match like the lowering itself.
+            def rescan(df) -> bool:
+                d = df.alias(alias) if alias else df
+                return bool(d.filter(F.expr(where)).take(1))
+
+    new_v, base = commit_rewrite(
+        spark, root, lower, discover=discover, conflict_rescan=rescan
     )
+    return _path_statement_row(spark, root, new_v, base)
 
 
 def execute_update_statement(

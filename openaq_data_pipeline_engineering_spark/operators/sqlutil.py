@@ -521,6 +521,9 @@ def _optimize_versioned(
     (:class:`ConcurrentWriteError`) instead of being silently erased
     from latest; the statement retries against the new latest (the
     rewrite adds no content of its own, so a retry is always safe)."""
+    from openaq_data_pipeline_engineering_spark.operators.cow import (
+        COMMIT_ATTEMPTS,
+    )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         ConcurrentWriteError,
         read_snapshot,
@@ -550,7 +553,7 @@ def _optimize_versioned(
         return n, b
 
     last_err: ConcurrentWriteError | None = None
-    for _ in range(3):
+    for _ in range(COMMIT_ATTEMPTS):
         versions = snapshot_versions(root)
         if not versions:
             raise FileNotFoundError(f"no committed versions under {root}")
@@ -641,6 +644,7 @@ def _optimize_incremental(
     import math
 
     from openaq_data_pipeline_engineering_spark.operators.cow import (
+        COMMIT_ATTEMPTS,
         commit_file_rewrite,
         ensure_cow_base,
         read_touched_subset,
@@ -659,7 +663,7 @@ def _optimize_incremental(
     )
 
     last_err = None
-    for _ in range(3):
+    for _ in range(COMMIT_ATTEMPTS):
         base = ensure_cow_base(spark, root)
         if base is None:
             raise UtilStatementError(

@@ -143,60 +143,12 @@ _DEFER_ONE_ROTATION = (
 )
 
 
-# Queries whose operators the ROUND-13 optimization arc touched
-# (VERDICT r12 #8: lead the driver's bounded correctness prefix with
-# the touched families so every rewrite gets a fresh driver-green row
-# this round; the remaining slots fill from the stalest pool as
-# usual). Witnesses per change: Arrow MinHash kernel (8-query family),
-# statement-protocol/1-file bases + fileset memo, adaptive streaming
-# state partitioning, struct-min dedup, corpus_curation gate,
-# merge_into_mart invariant, versioned claim-race append fix.
-_TOUCHED_THIS_ROUND = (
-    "minhash_lsh_candidates",
-    "containment_pairs",
-    "minhash_estimate_error",
-    "minhash_incremental_candidates",
-    "neardup_clusters",
-    "neardup_cluster_size_histogram",
-    "corpus_curation",
-    "pretraining_funnel",
-    "snapshot_change_feed",
-    "sql_update_delete_roundtrip",
-    "sql_update_delete_versioned",
-    "versioned_time_travel",
-    "sql_merge_full_sync",
-    "sql_merge_into",
-    "sql_merge_by_source_conditioned",
-    "sql_dml_noop_vacuum_accounting",
-    "streaming_outer_attribution",
-    "streaming_join_attribution",
-    "streaming_windowed_counts",
-    "streaming_stateful_running_counts",
-    "streaming_update_counts",
-    "streaming_topk_complete",
-    "streaming_static_enrich",
-    "streaming_sliding_counts",
-    "streaming_incremental_ingest",
-    "streaming_session_windows",
-    "dedup_window",
-    "dim_extract_dedup",
-    "incremental_mart_merge",
-    "sql_cow_merge_cdf_derived",
-    "sql_check_constraint",
-    "sql_concurrent_disjoint_dml",
-)
-
-
 def _ordered_names() -> list[str]:
     """Registry order: queries WITHOUT a green row in the latest
     correctness snapshot first (stable registration order), then the
-    greens whose operators THIS round's optimizations touched
-    (:data:`_TOUCHED_THIS_ROUND`, declaration order), then the
-    remaining greens by ASCENDING evidence age — the round of their
-    newest green row — so the driver's bounded per-round prefix
-    validates every touched family first and re-validates the STALEST
-    evidence with the rest (VERDICT r7 #2 freshness rotation +
-    VERDICT r12 #8 touched-family priority).
+    greens by ASCENDING evidence age — the round of their newest green
+    row — so a bounded per-round correctness prefix re-validates the
+    STALEST evidence first (VERDICT r7 #2 freshness rotation).
 
     The driver checks a bounded prefix of ``queries()`` per round, so
     never-verified queries convert to driver rows fastest, and a green
@@ -220,15 +172,8 @@ def _ordered_names() -> list[str]:
     deferred = [
         n for n in names if not is_green(n) and n in _DEFER_ONE_ROTATION
     ]
-    touched_rank = {n: i for i, n in enumerate(_TOUCHED_THIS_ROUND)}
     greens = [n for n in names if is_green(n)]
-    greens.sort(
-        key=lambda n: (
-            (0, touched_rank[n], 0)
-            if n in touched_rank
-            else (1, 0, green_round(n))
-        )
-    )  # stable: ties keep registration order
+    greens.sort(key=green_round)  # stable: ties keep registration order
     return fresh + deferred + greens
 
 

@@ -8,8 +8,8 @@ missing half of §2.9 next to dedup-in-watermark.
 
 Mechanics: ``foreachBatch`` gives each micro-batch as a normal batch
 DataFrame; the batch is first reduced to one row per key (greatest
-``ts_col``, deterministic tiebreak on the key hash), then MERGEd over
-the current snapshot with :func:`operators.merge.merge_upsert`.
+``ts_col``, exact ties broken by the md5 of the whole row), then MERGEd
+over the current snapshot with :func:`operators.merge.merge_upsert`.
 
 Snapshot storage is the engine's versioned table layer
 (operators/versioned.py — manifest-committed immutable ``v=<N>``
@@ -31,38 +31,16 @@ memory — unbounded key cardinality is fine.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from openaq_data_pipeline_engineering_spark.operators.merge import merge_upsert
 from openaq_data_pipeline_engineering_spark.operators import versioned
-
-def _migrate_legacy_layout(spark: SparkSession, target_dir: str) -> None:
-    """One-time upgrade from the pre-round-6 ``v{N}``-directory scheme
-    (no manifest) to the versioned layer. Without this, a resumed
-    stream would see no manifest, read None, and silently REBUILD the
-    snapshot from the next micro-batch alone — losing all accumulated
-    keyed state. The newest legacy directory is committed as version 1
-    (idempotent txn, so concurrent resumers migrate once); legacy dirs
-    are left in place and harmless."""
-    import os
-    import re as _re
-
-    try:
-        entries = os.listdir(target_dir)
-    except OSError:
-        return
-    legacy = sorted(
-        int(m.group(1))
-        for m in (_re.fullmatch(r"v(\d+)", e) for e in entries)
-        if m and os.path.isdir(os.path.join(target_dir, m.group(0)))
-    )
-    if not legacy or versioned.snapshot_versions(target_dir):
-        return
-    latest = spark.read.parquet(os.path.join(target_dir, f"v{legacy[-1]}"))
-    versioned.write_snapshot(
-        latest, target_dir, txn_id=f"legacy-migrate-v{legacy[-1]}"
-    )
+from openaq_data_pipeline_engineering_spark.operators.cow import (
+    commit_rewrite,
+    touched_files_by_keys,
+)
+from openaq_data_pipeline_engineering_spark.operators.dedup import dedup_first
+from openaq_data_pipeline_engineering_spark.operators.merge import merge_upsert
 
 
 def read_snapshot(spark: SparkSession, target_dir: str) -> DataFrame | None:
@@ -70,27 +48,7 @@ def read_snapshot(spark: SparkSession, target_dir: str) -> DataFrame | None:
     try:
         return versioned.read_snapshot(spark, target_dir)
     except FileNotFoundError:
-        _migrate_legacy_layout(spark, target_dir)
-        try:
-            return versioned.read_snapshot(spark, target_dir)
-        except FileNotFoundError:
-            return None
-
-
-def collapse_batch(batch: DataFrame, keys: list[str], ts_col: str) -> DataFrame:
-    """One row per key: greatest ts wins; md5 of the WHOLE ROW breaks
-    exact (key, ts) ties deterministically (layout-independent, unlike
-    first() — and unlike an md5 of the key columns, which is constant
-    within the partition and therefore discriminates nothing when two
-    deliveries share the key AND timestamp but differ in payload)."""
-    w = Window.partitionBy(*keys).orderBy(
-        F.desc(ts_col), F.md5(F.to_json(F.struct(*batch.columns)))
-    )
-    return (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+        return None
 
 
 def upsert_batch(
@@ -114,105 +72,41 @@ def upsert_batch(
     txn_keep_last to retire old entries) — same contract as Delta.
     """
     spark = batch.sparkSession
-    delta = collapse_batch(batch, keys, ts_col)
-    # Read-modify-write under the optimistic guard: the merge result is
-    # computed FROM a pinned version, so the commit is conditional on
-    # the table still being there (expected_latest). One stream's
+    # One row per key: greatest ts wins; the md5 of the WHOLE ROW breaks
+    # exact (key, ts) ties deterministically (layout-independent, unlike
+    # first() — and unlike an md5 of the key columns, which is constant
+    # within the partition and therefore discriminates nothing when two
+    # deliveries share the key AND timestamp but differ in payload).
+    delta = dedup_first(
+        batch,
+        keys,
+        [F.desc(ts_col), F.md5(F.to_json(F.struct(*batch.columns)))],
+    )
+    # Read-modify-write under the optimistic guard (cow.commit_rewrite):
+    # the merge result is computed FROM a pinned version, so the commit
+    # is conditional on the table still being there. One stream's
     # micro-batches are serial, but a SECOND writer on the same target
     # (another stream, a batch MERGE, an OPTIMIZE) landing between this
-    # read and commit would otherwise be silently erased — the exact
-    # lost-update anomaly the r8 advisor closed in checkpoint/OPTIMIZE.
-    # On conflict: re-read, re-merge, retry; the txn_id still dedupes a
-    # REPLAY of this same batch at any point.
-    # FILE-GRANULAR commit (operators/cow.py): per batch the write was
-    # O(table) — read latest, merge, write a COMPLETE new version, so a
-    # long-running stream re-wrote its accumulated state every
-    # micro-batch. When the latest version is a flat full snapshot, the
-    # merge now runs over ONLY the files whose keys the batch touches
-    # (one broadcast left-semi join on the collapsed batch's key set);
-    # every other file is hardlink-carried. Per-batch write I/O becomes
-    # O(touched files + batch), matching the delta-append sinks.
-    # Partitioned (adopted) bases are file-granular too: the subset
-    # read pins partition columns via basePath and the commit
-    # republishes through partitionBy (VERDICT r10 #1). Ineligible
-    # bases (mixed layouts, schema-evolving batches) keep the
-    # identical-result full publish.
-    from openaq_data_pipeline_engineering_spark.operators.cow import (
-        commit_file_rewrite,
-        ensure_cow_base,
-        read_touched_subset,
-        schema_preserved,
-        touched_files_by_keys,
+    # read and commit would otherwise be silently erased. On conflict:
+    # re-read, re-merge, retry; the txn_id still dedupes a REPLAY of
+    # this same batch at any point. No conflict rescan: keyed batches
+    # serialize and retry.
+    # FILE-GRANULAR commit: the merge runs over ONLY the files whose
+    # keys the batch touches. When the version carries a skipstats
+    # manifest, discovery first keeps the files whose key box meets the
+    # batch's (no data footer read); then one broadcast left-semi join
+    # on the collapsed batch's key set over those candidates. Every
+    # other file is carried as a fileset sidecar entry. Per-batch write
+    # I/O is O(touched files + batch).
+    commit_rewrite(
+        spark,
+        target_dir,
+        lambda target: (
+            delta if target is None else merge_upsert(target, delta, keys)
+        ),
+        discover=lambda vdir: touched_files_by_keys(spark, vdir, delta, keys),
+        txn_id=f"{txn_app_id}-{batch_id}",
     )
-
-    last_err: versioned.ConcurrentWriteError | None = None
-    for _ in range(8):
-        versions = versioned.snapshot_versions(target_dir)
-        if not versions:
-            _migrate_legacy_layout(spark, target_dir)
-            versions = versioned.snapshot_versions(target_dir)
-        txn_id = f"{txn_app_id}-{batch_id}"
-        if versions:
-            expected = versions[-1]
-            cow_base = ensure_cow_base(spark, target_dir)
-            if cow_base is not None:
-                from openaq_data_pipeline_engineering_spark.operators.cow import (
-                    resolve_base_dir,
-                )
-                from openaq_data_pipeline_engineering_spark.operators.filesets import (
-                    read_version_dir,
-                )
-
-                expected = cow_base
-                vdir = resolve_base_dir(target_dir, expected)
-                base_df = read_version_dir(spark, vdir)
-                # None = delta plan unsafe to evaluate twice (ADVICE
-                # r10 #1) -> single-evaluation full publish below
-                touched = touched_files_by_keys(spark, vdir, delta, keys)
-                if touched is not None:
-                    subset = (
-                        # schema-pinned basePath read: partitioned
-                        # bases keep their key=value partition columns
-                        read_touched_subset(
-                            spark, vdir, touched, base_df.schema
-                        )
-                        if touched
-                        else base_df.limit(0)
-                    )
-                    merged_sub = merge_upsert(subset, delta, keys)
-                    if schema_preserved(base_df, merged_sub):
-                        try:
-                            commit_file_rewrite(
-                                spark,
-                                target_dir,
-                                expected,
-                                merged_sub,
-                                touched,
-                                txn_id=txn_id,
-                            )
-                            break
-                        except versioned.ConcurrentWriteError as e:
-                            last_err = e
-                            continue
-            base = versioned.read_snapshot(
-                spark, target_dir, version=expected
-            )
-            merged = merge_upsert(base, delta, keys)
-        else:
-            expected = 0  # creating write: conditional on staying empty
-            merged = delta
-        try:
-            versioned.write_snapshot(
-                merged,
-                target_dir,
-                txn_id=txn_id,
-                expected_latest=expected,
-            )
-            break
-        except versioned.ConcurrentWriteError as e:
-            last_err = e
-    else:
-        raise last_err
     # Committed-version retention only; orphan reclamation keeps its
     # 24h grace (a concurrent writer may own a fresh uncommitted dir).
     # Txn dedupe entries are NOT retired with the data (vacuum's

@@ -24,13 +24,8 @@ def test_greens_ordered_by_evidence_age():
         k += 1
     green_names = names[k:]
     assert all(green_round(n) is not None for n in green_names)
-    # ... then this round's touched-family greens (declaration order) ...
-    touched = [
-        n for n in registry._TOUCHED_THIS_ROUND if green_round(n) is not None
-    ]
-    assert green_names[: len(touched)] == touched
-    # ... and the remaining green tail is non-decreasing in evidence round
-    tail = [green_round(n) for n in green_names[len(touched):]]
+    # ... then the greens, non-decreasing in evidence round
+    tail = [green_round(n) for n in green_names]
     assert tail == sorted(tail)
 
 

@@ -8,9 +8,9 @@ import json
 from pyspark.sql import types as T
 
 from openaq_data_pipeline_engineering_spark.streaming.upsert import (
-    collapse_batch,
     read_snapshot,
     run_stream_upsert,
+    upsert_batch,
 )
 
 SCHEMA = T.StructType(
@@ -30,15 +30,21 @@ def _stream(spark, src):
     return spark.readStream.format("json").schema(SCHEMA).load(str(src))
 
 
-def test_collapse_batch_last_writer_wins(spark):
+def _upsert_once(spark, df, target):
+    """One micro-batch into a fresh target; the snapshot as {k: v}."""
+    upsert_batch(df, 0, target, ["k"], "ts")
+    return {r["k"]: r["v"] for r in read_snapshot(spark, target).collect()}
+
+
+def test_batch_collapse_last_writer_wins(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "old", 10), (1, "new", 20), (2, "only", 5)], SCHEMA
     )
-    got = {r["k"]: r["v"] for r in collapse_batch(df, ["k"], "ts").collect()}
+    got = _upsert_once(spark, df, str(tmp_path / "t"))
     assert got == {1: "new", 2: "only"}
 
 
-def test_collapse_batch_exact_ts_tie_is_layout_independent(spark):
+def test_batch_collapse_exact_ts_tie_is_layout_independent(spark, tmp_path):
     """Two deliveries sharing (key, ts) but differing payloads must
     collapse to the SAME winner on any partition layout — the row-hash
     tiebreak discriminates payloads (an md5 of the key columns alone is
@@ -47,9 +53,7 @@ def test_collapse_batch_exact_ts_tie_is_layout_independent(spark):
     winners = set()
     for parts in (1, 3, 7):
         df = spark.createDataFrame(rows, SCHEMA).repartition(parts)
-        got = {
-            r["k"]: r["v"] for r in collapse_batch(df, ["k"], "ts").collect()
-        }
+        got = _upsert_once(spark, df, str(tmp_path / f"t{parts}"))
         assert got[2] == "x" and got[1] in ("alpha", "beta")
         winners.add(got[1])
     assert len(winners) == 1  # same winner on every layout
@@ -116,34 +120,6 @@ def test_replayed_batch_is_idempotent_and_cdf_works(spark, tmp_path):
         (2, "update_preimage"),
         (2, "update_postimage"),
         (3, "insert"),
-    }
-
-
-def test_legacy_layout_migrates_instead_of_data_loss(spark, tmp_path):
-    """Pre-round-6 targets used v{N} dirs with no manifest; resuming a
-    stream over one must MIGRATE that state, not silently rebuild the
-    snapshot from the next micro-batch alone."""
-    from openaq_data_pipeline_engineering_spark.streaming.upsert import (
-        read_snapshot,
-        upsert_batch,
-    )
-
-    tgt = str(tmp_path / "legacy")
-    old = spark.createDataFrame(
-        [(1, 10, 1.0), (2, 10, 2.0)], "k int, ts int, v double"
-    )
-    old.write.parquet(f"{tgt}/v0")
-    old.selectExpr("k", "ts", "v * 10 AS v").write.parquet(f"{tgt}/v1")
-
-    snap = read_snapshot(spark, tgt)  # triggers one-time migration
-    assert snap is not None
-    assert {(r["k"], r["v"]) for r in snap.collect()} == {(1, 10.0), (2, 20.0)}
-
-    b = spark.createDataFrame([(3, 20, 3.0)], "k int, ts int, v double")
-    upsert_batch(b, 99, tgt, ["k"], "ts")
-    merged = read_snapshot(spark, tgt)
-    assert {(r["k"], r["v"]) for r in merged.collect()} == {
-        (1, 10.0), (2, 20.0), (3, 3.0),
     }
 
 
@@ -231,8 +207,9 @@ def test_clone_of_the_sink_pauses_retention_without_failing(
 def test_upsert_batches_are_file_granular(spark, tmp_path):
     """VERDICT r9 #1 applied to the streaming sink: a micro-batch
     touching one key rewrites only the file containing it; every other
-    file of the base version is hardlink-carried (inode-equal) — the
-    per-batch write is O(touched files + batch), not O(table)."""
+    file of the base version is carried as an entry of the new
+    version's fileset sidecar, naming its v=1 file — the per-batch
+    write is O(touched files + batch), not O(table)."""
     import glob
     import os
 
@@ -254,14 +231,11 @@ def test_upsert_batches_are_file_granular(spark, tmp_path):
     )
     versioned.write_snapshot(base.repartition(8, "k"), target)
 
-    def inodes(version):
-        return {
-            os.path.basename(p): os.stat(p).st_ino
-            for p in glob.glob(os.path.join(target, f"v={version}", "*.parquet"))
-            if not os.path.basename(p).startswith(("_", "."))
-        }
-
-    v1 = inodes(1)
+    v1 = {
+        os.path.basename(p)
+        for p in glob.glob(os.path.join(target, "v=1", "*.parquet"))
+        if not os.path.basename(p).startswith(("_", "."))
+    }
     batch = spark.createDataFrame(
         [(5, "UPDATED", 2), (10_000, "NEW", 2)], "k long, v string, ts long"
     )
@@ -277,7 +251,7 @@ def test_upsert_batches_are_file_granular(spark, tmp_path):
 
     fs = read_fileset(os.path.join(target, "v=2")) or {"entries": []}
     carried = {e["rel"] for e in fs["entries"] if int(e["v"]) != 2}
-    assert carried <= set(v1) and len(carried) == stats["files_carried"]
+    assert carried <= v1 and len(carried) == stats["files_carried"]
     got = {
         r["k"]: r["v"]
         for r in versioned.read_snapshot(spark, target).collect()
