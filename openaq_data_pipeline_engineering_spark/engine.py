@@ -80,9 +80,10 @@ _BUILD_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Partitioned-table writes are idempotent per-partition, not blind
-    # append (reference process_openaq_raw.py:253-255 appends and relies on
-    # never re-running; dynamic overwrite makes re-runs safe).
+    # A default for the caller's own partitioned overwrites: idempotent
+    # per partition, not blind append (reference process_openaq_raw.py:
+    # 253-255 appends and relies on never re-running). The library's own
+    # writes swap partitions in (operators/compact.replace_partitions).
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.parquet.compression.codec": "snappy",
     # 128 MiB scan splits — the reference's own file-size target

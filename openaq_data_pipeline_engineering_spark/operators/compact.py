@@ -6,16 +6,17 @@ target, doc/GLUE_JOBS_GUIDE.md:309-311,399-407). Compaction rewrites
 each partition's files into ~target-sized ones — the OPTIMIZE of table
 formats, done directly on the directory layout.
 
-Scale notes: work is proportional to the partitions selected, not the
-table; each partition is rewritten independently via dynamic partition
-overwrite, so concurrent readers never see a partial partition (parquet
-commit is per-directory atomic-rename).
+Every rewrite of a plain (non-versioned) table — compaction, the
+ZORDER rewrites, the mart write, the re-delivery merge — goes through
+:func:`replace_partitions`. Work is proportional to the partitions
+selected, not the table.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,14 +61,14 @@ def compact_partitions(
 ) -> None:
     """Rewrite (optionally filtered) partitions into ~target-sized files.
 
-    File count per partition = ceil(partition_bytes / target); data is
-    read with the table's schema and written back with dynamic overwrite
+    Task count = ceil(table_bytes / target); data is read with the
+    table's schema and swapped back in by :func:`replace_partitions`,
     so untouched partitions are left alone.
 
     ``partition_filter`` SELECTS PARTITIONS, never rows: the predicate
     is evaluated only to find the distinct partition tuples it touches,
     and every selected partition is rewritten WHOLE (a compaction must
-    be row-preserving — filtering rows under dynamic overwrite would
+    be row-preserving — filtering rows under a partition replace would
     silently delete the non-matching rows of each touched partition).
     A predicate on non-partition columns is therefore safe too: it
     widens to the partitions containing any matching row. Requires a
@@ -86,10 +87,10 @@ def compact_partitions(
     """
     from pyspark.sql import functions as F
 
-    # Partition columns pinned to string so the dynamic overwrite
-    # replaces the SAME directories it read (see
-    # read_preserving_partitions — inference would re-spell zero-padded
-    # values and duplicate the table).
+    _recover_interrupted_partition_rewrite(path)  # before the read
+    # Partition columns pinned to string so the swap replaces the SAME
+    # directories it read (see read_preserving_partitions — inference
+    # would re-spell zero-padded values and duplicate the table).
     df = (
         read_preserving_partitions(spark, path, partition_cols)
         if partition_cols
@@ -99,48 +100,111 @@ def compact_partitions(
         if not partition_cols:
             raise ValueError(
                 "partition_filter requires a partitioned table: on an "
-                "unpartitioned table the dynamic-overwrite write would "
-                "replace the WHOLE table with only the matching rows"
+                "unpartitioned table the rewrite would replace the "
+                "WHOLE table with only the matching rows"
             )
         parts = (
             df.filter(partition_filter).select(*partition_cols).distinct()
         )
         df = df.join(F.broadcast(parts), partition_cols, "left_semi")
 
-    # size estimate per partition from the file system (cheap listing)
-    sizes: dict[tuple, int] = {}
-    for root, _dirs, files in os.walk(path):
-        pvals = _partition_values(root, path, partition_cols)
-        if pvals is None:
-            continue
-        nbytes = sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
-        if nbytes:
-            sizes[pvals] = sizes.get(pvals, 0) + nbytes
-
-    total = sum(sizes.values()) or 1
+    total = file_stats(path)["total_bytes"]  # cheap listing
     n_files = max(1, math.ceil(total / target_file_bytes))
-    (
-        df.repartition(n_files, *partition_cols)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_cols)
-        .parquet(path)
+    replace_partitions(
+        df.repartition(n_files, *partition_cols), path, partition_cols
     )
 
 
-def _partition_values(
-    dirpath: str, base: str, partition_cols: list[str]
-) -> tuple | None:
-    rel = os.path.relpath(dirpath, base)
-    parts = [p for p in rel.split(os.sep) if "=" in p]
-    vals = dict(p.split("=", 1) for p in parts)
-    if set(partition_cols) <= set(vals):
-        return tuple(vals[c] for c in partition_cols)
-    return None
+_STAGING = ".__optimize_tmp__"
+_PARKED = ".__optimize_old__"
+
+
+def replace_partitions(
+    df: DataFrame, path: str, partition_cols: list[str]
+) -> None:
+    """Make each partition ``df`` has rows for hold exactly those rows
+    in the plain Parquet table at ``path``, leaving the others alone;
+    with no ``partition_cols`` the table directory is the one partition.
+
+    ``df`` is written (one Spark job) into the sibling tree
+    ``<path>.__optimize_tmp__``, then each staged partition is swapped
+    in by :func:`_swap_partition_dir` in sorted order: a crash leaves
+    new partitions and old ones, never a partial one. (Spark's dynamic
+    overwrite deletes a partition, then renames the new one in; a
+    crash between the two drops it.)
+
+    A plain table has one writer at a time; concurrent writers belong
+    on a versioned root, whose manifest commit is atomic. A caller
+    that reads the table to build ``df`` heals it first
+    (:func:`_recover_interrupted_partition_rewrite`): the read does not
+    see a parked partition, and its swap would replace the healed
+    partition with ``df``'s rows alone."""
+    path = path.rstrip("/")
+    staging = path + _STAGING
+    shutil.rmtree(staging, ignore_errors=True)
+    # a plain write: an overwrite would nest Spark's dynamic commit
+    # protocol inside the staging tree
+    df.write.partitionBy(*partition_cols).parquet(staging)
+    leaves = sorted(_partition_leaf_dirs(staging)) if partition_cols else ["."]
+    for rel in leaves:
+        _swap_partition_dir(path, staging, rel)
+    shutil.rmtree(staging, ignore_errors=True)
+
+
+def _partition_leaf_dirs(root: str) -> list[str]:
+    """Relative paths of every directory under ``root`` directly
+    holding parquet files (the Hive partition leaves)."""
+    out: list[str] = []
+    for r, _dirs, files in os.walk(root):
+        if any(f.endswith(".parquet") for f in files):
+            out.append(os.path.relpath(r, root))
+    return out
+
+
+def _parked_dir(live: str) -> str:
+    """Where a swap parks ``live``: a dot-prefixed sibling, which
+    Spark's partition discovery skips — a reader mid-swap never sees a
+    partition twice or a bogus partition value."""
+    head, leaf = os.path.split(live)
+    return os.path.join(head, "." + leaf + _PARKED)
+
+
+def _swap_partition_dir(path: str, staging: str, rel: str) -> None:
+    """Swap ONE partition directory from staging into the live table:
+    live → :func:`_parked_dir` → staged-in → reclaim the parked copy.
+    A crash between the two renames leaves the partition parked."""
+    live = os.path.normpath(os.path.join(path, rel))
+    old = _parked_dir(live)
+    os.makedirs(os.path.dirname(live), exist_ok=True)
+    if os.path.isdir(live):
+        os.rename(live, old)
+    os.rename(os.path.normpath(os.path.join(staging, rel)), live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _recover_interrupted_partition_rewrite(path: str) -> None:
+    """Heal a :func:`replace_partitions` that crashed mid-swap. A
+    parked directory (in the table, or beside an unpartitioned one)
+    whose live directory is absent is renamed back — the crash hit
+    between the two renames; one whose live directory exists is a
+    completed swap's leftover and is removed. Parked names without the
+    leading dot, left by older releases, heal the same way. The staging
+    tree is then removed: every partition not yet swapped still has its
+    old data live."""
+    path = path.rstrip("/")
+    parked = [_parked_dir(path), path + _PARKED]
+    for r, dirs, _files in os.walk(path):
+        parked += [os.path.join(r, d) for d in dirs if d.endswith(_PARKED)]
+    for old in parked:
+        if not os.path.isdir(old):
+            continue
+        head, name = os.path.split(old)
+        live = os.path.join(head, name[: -len(_PARKED)].removeprefix("."))
+        if os.path.isdir(live):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, live)
+    shutil.rmtree(path + _STAGING, ignore_errors=True)
 
 
 def iter_data_parquet_files(path: str):

@@ -17,7 +17,7 @@ lower onto the engine's existing primitives:
 - ``OPTIMIZE`` without ZORDER = small-file compaction
   (operators/compact.compact_partitions — partition columns
   auto-detected from the Hive directory layout; work ∝ selected
-  partitions via dynamic overwrite).
+  partitions).
 - ``OPTIMIZE ... ZORDER BY (a, b[, ...])`` rewrites the table
   range-clustered by the N-way Morton interleave
   (functions/zorder.morton_code_n, 63 // N bits per column; one
@@ -25,9 +25,11 @@ lower onto the engine's existing primitives:
   for box-pruned reads. Columns must be non-negative integers (the
   Morton domain). On a Hive-PARTITIONED table the rewrite z-clusters
   WITHIN each partition (one distributed range-repartition on
-  (partition cols, morton key) + dynamic overwrite; WHERE selects
-  which partitions to rewrite); z-columns that are partition columns
-  are rejected (constant within a partition).
+  (partition cols, morton key); WHERE selects which partitions to
+  rewrite); z-columns that are partition columns are rejected
+  (constant within a partition). Every plain-table form rewrites
+  through operators/compact.replace_partitions (staging tree +
+  per-partition two-rename swap, healed on the next statement).
 - ``VACUUM ... RETAIN n VERSIONS`` = operators/versioned.
   vacuum_snapshots(keep_last=n). Retention is VERSION-count-based (the
   versioned layer's native unit) rather than Delta's hours; txn dedupe
@@ -175,6 +177,7 @@ def execute_optimize(spark: SparkSession, sql: str) -> DataFrame:
     """Lower an OPTIMIZE statement; returns one metrics row
     (n_files_before, n_files_after, n_rows)."""
     from openaq_data_pipeline_engineering_spark.operators.compact import (
+        _recover_interrupted_partition_rewrite,
         compact_partitions,
         file_stats,
     )
@@ -235,8 +238,7 @@ def execute_optimize(spark: SparkSession, sql: str) -> DataFrame:
             "file-granular commit protocol); plain tables compact "
             "with the bare OPTIMIZE form"
         )
-    _recover_interrupted_rewrite(path)  # heal a crashed prior rewrite
-    _recover_interrupted_partition_rewrite(path)  # per-partition form
+    _recover_interrupted_partition_rewrite(path)  # before any read
     before = file_stats(path)["n_files"]
     if m.group("cols"):
         cols = [c.strip() for c in m.group("cols").split(",")]
@@ -302,36 +304,17 @@ def _footer_row_count(path: str) -> int:
 def _zorder_rewrite(
     spark: SparkSession, path: str, cols: list[str], n_files: int = 16
 ) -> None:
-    """Rewrite ``path`` range-clustered by the (Morton-interleaved)
-    cluster key.
-
-    Staging-dir + two renames: the table is never a partial MIX of old
-    and new files, but plain directories cannot be swapped atomically
-    (no RENAME_EXCHANGE on a portable path), so a crash between the
-    two renames leaves the data intact at ``<path>.__optimize_old__``
-    with nothing at ``path``. :func:`_recover_interrupted_rewrite` runs
-    first and heals exactly that state by renaming the old directory
-    back, so the NEXT OPTIMIZE (or any caller invoking the recovery)
-    restores the table; readers during the window fail loudly rather
-    than seeing partial data. Tables needing a zero-window swap should
-    live under operators/versioned.py, whose manifest commit IS atomic.
-    """
-    import os
-    import shutil
-
-    _recover_interrupted_rewrite(path)
-    df = spark.read.parquet(path)
-    key = _zorder_key(cols)
-    staging = path.rstrip("/") + ".__optimize_tmp__"
-    shutil.rmtree(staging, ignore_errors=True)
-    df.repartitionByRange(n_files, key).write.mode("overwrite").parquet(
-        staging
+    """Rewrite the unpartitioned table ``path`` range-clustered by the
+    (Morton-interleaved) cluster key, swapped in whole by
+    compact.replace_partitions (a crash leaves it parked beside
+    ``path``, readers fail loudly until the next OPTIMIZE heals it).
+    Tables needing a zero-window swap belong under a versioned root."""
+    from openaq_data_pipeline_engineering_spark.operators.compact import (
+        replace_partitions,
     )
-    old = path.rstrip("/") + ".__optimize_old__"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
+
+    df = spark.read.parquet(path).repartitionByRange(n_files, _zorder_key(cols))
+    replace_partitions(df, path, [])
 
 
 def _zorder_key(cols: list[str]):
@@ -348,69 +331,6 @@ def _zorder_key(cols: list[str]):
         return F.col(cols[0]).cast("bigint")
     bits = min(16, 63 // len(cols))
     return morton_code_n([F.col(c).cast("bigint") for c in cols], bits=bits)
-
-
-def _partition_leaf_dirs(root: str) -> list[str]:
-    """Relative paths of every directory under ``root`` directly
-    holding parquet files (the Hive partition leaves; ``['.']`` for an
-    unpartitioned layout)."""
-    out: list[str] = []
-    for r, _dirs, files in os.walk(root):
-        if any(f.endswith(".parquet") for f in files):
-            out.append(os.path.relpath(r, root))
-    return out
-
-
-def _swap_partition_dir(path: str, staging: str, rel: str) -> None:
-    """Swap ONE partition directory from staging into the live table:
-    live → ``<live>.__optimize_old__`` → staged-in → reclaim old. The
-    same two-rename discipline as the whole-table rewrite, applied per
-    partition so a crash's blast radius is a single healed partition
-    (see :func:`_recover_interrupted_partition_rewrite`)."""
-    import shutil
-
-    live = os.path.join(path, rel)
-    old = live.rstrip("/") + ".__optimize_old__"
-    shutil.rmtree(old, ignore_errors=True)
-    os.makedirs(os.path.dirname(live), exist_ok=True)
-    if os.path.isdir(live):
-        os.rename(live, old)
-    os.rename(os.path.join(staging, rel), live)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _recover_interrupted_partition_rewrite(path: str) -> None:
-    """Heal a partitioned OPTIMIZE that crashed mid-swap (VERDICT r8
-    #4: the dynamic-overwrite form could leave a partition mix of old
-    and new clustering with no healer). Per partition directory:
-
-    - ``<P>.__optimize_old__`` present, ``<P>`` absent → the crash hit
-      between the two renames; rename the old data back (that
-      partition is simply un-optimized).
-    - both present → the swap completed but the old dir wasn't
-      reclaimed: remove the leftover.
-
-    The staging tree ``<path>.__optimize_tmp__`` is then removed
-    whole: any partition not yet swapped still has its complete OLD
-    data live, so dropping its staged rewrite loses nothing — the
-    table is always a consistent mix of fully-old and fully-new
-    partitions, never a partial partition."""
-    import shutil
-
-    if not os.path.isdir(path):
-        return
-    for r, dirs, _files in os.walk(path, topdown=False):
-        for d in list(dirs):
-            if d.endswith(".__optimize_old__"):
-                old = os.path.join(r, d)
-                live = old[: -len(".__optimize_old__")]
-                if os.path.isdir(live):
-                    shutil.rmtree(old, ignore_errors=True)
-                else:
-                    os.rename(old, live)
-    shutil.rmtree(
-        path.rstrip("/") + ".__optimize_tmp__", ignore_errors=True
-    )
 
 
 def _zorder_rewrite_partitioned(
@@ -431,17 +351,12 @@ def _zorder_rewrite_partitioned(
     tasks covering it hold DISJOINT morton ranges, i.e. each
     partition's files carry tight min/max boxes for skipstats pruning.
 
-    Crash discipline (VERDICT r8 #4): the clustered output is written
-    to a STAGING tree first (one distributed job), then swapped into
-    the live table one partition directory at a time with the same
-    two-rename healing as the unpartitioned rewrite — a crash anywhere
-    leaves every partition either fully old or fully new, and
-    :func:`_recover_interrupted_partition_rewrite` (run on entry and by
-    the next OPTIMIZE) restores the in-between partition. The prior
-    dynamic-overwrite form committed partitions through one job whose
-    commitJob is not atomic across directories — a mid-commit crash
-    could leave mixed clustering with no healer. Untouched partitions
-    (under a WHERE) are never staged, so they are never swapped.
+    Crash discipline (VERDICT r8 #4): the clustered output goes
+    through :func:`compact.replace_partitions` — staged, then swapped
+    in one partition directory at a time — so a crash anywhere leaves
+    every partition either fully old or fully new, and the next
+    OPTIMIZE heals before it reads. Untouched partitions (under a
+    WHERE) are never staged, so they are never swapped.
 
     ``partition_filter`` selects PARTITIONS, never rows (same contract
     as compact_partitions: a selected partition is rewritten WHOLE;
@@ -454,14 +369,12 @@ def _zorder_rewrite_partitioned(
     a 100 TB table still writes ~``target_file_bytes`` files rather
     than 4 giant ones per partition.
     """
-    import shutil
-
     from openaq_data_pipeline_engineering_spark.operators.compact import (
         file_stats,
         read_preserving_partitions,
+        replace_partitions,
     )
 
-    _recover_interrupted_partition_rewrite(path)
     # Partition columns pinned to string so each staged leaf swaps onto
     # the directory it came from (read_preserving_partitions —
     # inference would re-spell zero-padded values like month=01 as
@@ -484,20 +397,11 @@ def _zorder_rewrite_partitioned(
         -(-total_bytes // target_file_bytes),  # ceil
     )
     key = _zorder_key(cols)
-    staging = path.rstrip("/") + ".__optimize_tmp__"
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        df.repartitionByRange(int(n_tasks), *[F.col(c) for c in pcols], key)
-        .write.mode("overwrite")
-        .partitionBy(*pcols)
-        .parquet(staging)
+    replace_partitions(
+        df.repartitionByRange(int(n_tasks), *[F.col(c) for c in pcols], key),
+        path,
+        pcols,
     )
-    # Driver-side swap loop: O(1) metadata renames per partition (the
-    # data moved in the distributed write above), ordered so a crash
-    # leaves a prefix of new partitions and a suffix of old ones.
-    for rel in sorted(_partition_leaf_dirs(staging)):
-        _swap_partition_dir(path, staging, rel)
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 def _optimize_versioned(
@@ -735,18 +639,6 @@ def _optimize_incremental(
             "n_files_before int, n_files_after int, n_rows bigint",
         )
     raise last_err
-
-
-def _recover_interrupted_rewrite(path: str) -> None:
-    """Heal a rewrite that died between its two renames: data intact at
-    ``<path>.__optimize_old__``, nothing at ``path`` — rename it back.
-    A no-op in every other state (in particular it never touches the
-    old dir while ``path`` exists)."""
-    import os
-
-    old = path.rstrip("/") + ".__optimize_old__"
-    if not os.path.exists(path) and os.path.isdir(old):
-        os.rename(old, path)
 
 
 def execute_vacuum(spark: SparkSession, sql: str) -> DataFrame:

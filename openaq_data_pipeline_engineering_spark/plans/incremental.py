@@ -16,9 +16,9 @@ Spark-native replacement, no table format required:
    window-dedup with the batch's tiebreaker so a re-delivered or
    corrected row wins deterministically — the dedup's window and the
    write share that one exchange;
-3. write back with dynamic partitionOverwriteMode — only the touched
-   partitions are replaced. Spark replaces each one by delete, then
-   rename: a crash between the two loses that partition.
+3. swap the merged partitions in (operators/compact.replace_partitions)
+   — only the touched ones, each fully old or fully new after a crash;
+   a crashed earlier swap is healed BEFORE step 1 reads the mart.
 
 Cost at 100 TB: proportional to the touched partitions (a day or two),
 never the whole table. With Delta/Iceberg the same logic is a MERGE; the
@@ -31,6 +31,10 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openaq_data_pipeline_engineering_spark.operators.compact import (
+    _recover_interrupted_partition_rewrite,
+    replace_partitions,
+)
 from openaq_data_pipeline_engineering_spark.operators.dedup import dedup_first
 
 PARTITION_COLS = ["year", "month", "day"]
@@ -108,13 +112,11 @@ def merge_into_mart(
     Raises whatever reading the mart raises, except that a mart that
     does not exist yet is created from the batch.
     """
-    (
-        merged_partitions(spark, mart_path, batch, keys, tiebreaker)
-        .write.mode("overwrite")
-        # writer-level option, NOT session conf: on a session with
-        # static overwrite mode this write would otherwise truncate
-        # every untouched partition of the mart
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*PARTITION_COLS)
-        .parquet(mart_path)
+    # heal BEFORE the read: a partition a crash left parked is not
+    # listed, and its swap would replace it with batch-only rows
+    _recover_interrupted_partition_rewrite(mart_path)
+    replace_partitions(
+        merged_partitions(spark, mart_path, batch, keys, tiebreaker),
+        mart_path,
+        PARTITION_COLS,
     )

@@ -30,6 +30,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from openaq_data_pipeline_engineering_spark.operators.compact import (
+    _recover_interrupted_partition_rewrite,
+    replace_partitions,
+)
 from openaq_data_pipeline_engineering_spark.operators.parse import (
     drop_invalid_datetime,
     parse_datetime,
@@ -126,7 +130,6 @@ def build_mart(raw: DataFrame, cfg: MartConfig) -> DataFrame:
 def write_mart(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     sort_cols: list[str] | None = None,
 ) -> None:
     """Partitioned Snappy-Parquet sink (reference S6) — scale-fixed.
@@ -134,8 +137,10 @@ def write_mart(
     Repartition by the Hive partition columns so files per partition ==
     tasks that own that partition (reference process_openaq_raw.py:249
     repartitions by location_id instead and writes a file per
-    location×date). ``partitionOverwriteMode=dynamic`` (engine conf) makes
-    re-runs idempotent where the reference's blind append duplicates.
+    location×date). The partitions ``df`` holds replace their live
+    copies and no others (operators/compact.replace_partitions), so a
+    re-run is idempotent where the reference's blind append duplicates,
+    on any session conf.
 
     ``sort_cols`` (default: whichever of key/ts exist in the frame)
     clusters rows within each file so Parquet row-group min/max stats
@@ -148,8 +153,5 @@ def write_mart(
     out = df.repartition("year", "month", "day")
     if sort_cols:
         out = out.sortWithinPartitions("year", "month", "day", *sort_cols)
-    (
-        out.write.mode(mode)
-        .partitionBy("year", "month", "day")
-        .parquet(path)
-    )
+    _recover_interrupted_partition_rewrite(path)
+    replace_partitions(out, path, ["year", "month", "day"])

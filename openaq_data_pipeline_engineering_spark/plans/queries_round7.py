@@ -5,7 +5,7 @@ behavioral surfaces, plus the new declarative data-quality operator.
   idempotent re-delivery/correction merge the reference's blind-append
   job lacks (SURVEY §2.9; process_openaq_raw.py:253-255 appends, dup
   shrink is within-batch only). Two overlapping batches merge into a
-  Hive-partitioned mart with dynamic partition overwrite; untouched
+  Hive-partitioned mart by per-partition swap; untouched
   partitions must survive, re-delivered keys must take the corrected
   values.
 - ``bucketed_join_colocated``: the 100 TB co-located join strategy —
@@ -59,7 +59,7 @@ from openaq_data_pipeline_engineering_spark.sources.star import (
 # Mar 5-6. After both merges the mart must hold A's rows on the
 # untouched partitions (01, 02) and B's corrected rows on 03-06 —
 # witnessing partition-pruned read, window dedup with the batch
-# tiebreaker, and dynamic partition overwrite in one artifact.
+# tiebreaker, and the per-partition swap in one artifact.
 # Scale: cost ∝ touched partitions (days), never the whole mart.
 # --------------------------------------------------------------------------
 _WIN_A = ("1995-03-01", "1995-03-05")
@@ -90,7 +90,7 @@ def _mart_batch(
     "incremental_mart_merge",
     "idempotent incremental merge into a Hive-partitioned mart: "
     "re-delivered keys corrected, untouched partitions preserved "
-    "(plans/incremental.merge_into_mart, dynamic partition overwrite)",
+    "(plans/incremental.merge_into_mart, per-partition swap)",
     oracle="""
     WITH a AS (
         SELECT l_orderkey, l_linenumber, l_quantity AS qty,

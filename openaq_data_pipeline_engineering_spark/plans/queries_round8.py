@@ -274,7 +274,7 @@ def versioned_append_log(spark: SparkSession, sf_dir: str) -> DataFrame:
 # touched partition's files skipped on the second dimension) is pinned
 # by tests/test_round8_queries.py, not the oracle.
 # Scale: one distributed range-repartition on (partition cols, morton
-# key) — no per-partition driver loop; dynamic overwrite keeps
+# key) — no per-partition driver loop; the per-partition swap keeps
 # untouched partitions intact under a WHERE.
 # --------------------------------------------------------------------------
 _ZBOX = {"user_id": (4, 11), "val_floor": (64, 255)}

@@ -115,7 +115,7 @@ def test_catalog_registration_and_partition_pruning(spark, tmp_path):
 
         # new partition arrives on disk -> recover makes it queryable
         extra = mart.withColumn("year", F.lit("2031"))
-        write_mart(extra, out, mode="append")
+        write_mart(extra, out)
         recover_partitions(spark, "aq_mart_test")
         assert spark.table("aq_mart_test").filter("year='2031'").count() == mart.count()
     finally:

@@ -376,11 +376,11 @@ class TestPartitionedOptimizeCrashSafety:
         self, spark, tmp_path, monkeypatch
     ):
         from openaq_data_pipeline_engineering_spark.engine import Engine
-        from openaq_data_pipeline_engineering_spark.operators import sqlutil
+        from openaq_data_pipeline_engineering_spark.operators import compact
 
         df, out = self._table(spark, tmp_path)
         before = self._content(spark, out)
-        real = sqlutil._swap_partition_dir
+        real = compact._swap_partition_dir
         state = {"swaps": 0}
 
         def crashing(path, staging, rel):
@@ -389,7 +389,7 @@ class TestPartitionedOptimizeCrashSafety:
             state["swaps"] += 1
             real(path, staging, rel)
 
-        monkeypatch.setattr(sqlutil, "_swap_partition_dir", crashing)
+        monkeypatch.setattr(compact, "_swap_partition_dir", crashing)
         with pytest.raises(RuntimeError, match="injected crash"):
             Engine(spark).sql(f"OPTIMIZE '{out}' ZORDER BY (a, b)")
         monkeypatch.undo()
@@ -408,7 +408,7 @@ class TestPartitionedOptimizeCrashSafety:
     ):
         """The worst window: live renamed away, staged dir not yet
         renamed in — that partition is missing until the healer runs."""
-        from openaq_data_pipeline_engineering_spark.operators.sqlutil import (
+        from openaq_data_pipeline_engineering_spark.operators.compact import (
             _recover_interrupted_partition_rewrite,
         )
 
@@ -427,7 +427,7 @@ class TestPartitionedOptimizeCrashSafety:
     ):
         import shutil
 
-        from openaq_data_pipeline_engineering_spark.operators.sqlutil import (
+        from openaq_data_pipeline_engineering_spark.operators.compact import (
             _recover_interrupted_partition_rewrite,
         )
 
