@@ -14,10 +14,10 @@ the new version untouched. This module is that write path:
    left-semi join on the MERGE ON condition. Parquet row-group min/max
    stats serve the same role as Delta's file-stats manifest here: the
    pushed predicate skips whole row groups, so a file that cannot
-   contain a match costs its footer, not its bytes (the persisted
-   manifest variant of the same idea is operators/skipstats.py). The
-   collected list is O(touched files) on the driver — the same
-   driver-side file list Delta's MERGE produces.
+   contain a match costs its footer, not its bytes. This exact scan is
+   the only discovery route: UPDATE/DELETE, MERGE and the keyed upsert
+   each run one. The collected list is O(touched files) on the driver
+   — the same driver-side file list Delta's MERGE produces.
 2. **Partial rewrite** — the statement's lowering runs over ONLY the
    touched files (rows in untouched files by construction match
    nothing, so the lowering's output over the subset union the carried
@@ -88,7 +88,6 @@ this write path exists for the engine's own lakehouse layer.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 from urllib.parse import unquote, urlparse
 
@@ -122,10 +121,6 @@ def local_path(uri: str) -> str:
     if parsed.scheme in ("file", ""):
         return unquote(parsed.path)
     return uri
-
-
-def base_version_dir(root: str, base: int) -> str:
-    return os.path.join(root, f"v={base}")
 
 
 def recorded_layout(root: str, base: int) -> list[str] | None:
@@ -297,216 +292,6 @@ def plan_is_cow_safe(df: DataFrame) -> bool:
     return not any(fn in text for fn in _PER_QUERY_CONSTANT_FNS)
 
 
-# Top-level AND conjuncts of the shapes `col <op> literal`,
-# `col IN (lit, ...)`, and `col BETWEEN lit AND lit` (optionally
-# alias-qualified; comparisons accept either operand order) — the
-# fragment of predicate language the persisted skipstats manifest can
-# prune on. Anything a regex does not FULLY match is ignored (ignoring
-# a conjunct only widens the candidate set — sound); a predicate with
-# no usable conjunct skips the manifest route entirely.
-_LIT = r"-?\d+(?:\.\d+)?|'[^']*'"
-_CONJ_RE = re.compile(
-    r"^\s*(?:(?P<q1>\w+)\s*\.\s*)?(?P<col>\w+)\s*"
-    r"(?P<op><=|>=|=|<|>)\s*"
-    rf"(?P<lit>{_LIT})\s*$"
-)
-_IN_RE = re.compile(
-    r"^\s*(?:(?P<q1>\w+)\s*\.\s*)?(?P<col>\w+)\s+IN\s*"
-    rf"\(\s*(?P<lits>(?:{_LIT})(?:\s*,\s*(?:{_LIT}))*)\s*\)\s*$",
-    re.IGNORECASE,
-)
-# BETWEEN's inner AND is protected from the top-level split by masking
-# it first; the placeholder keeps offsets stable for the regexes.
-_BETWEEN_RE = re.compile(
-    r"^\s*(?:(?P<q1>\w+)\s*\.\s*)?(?P<col>\w+)\s+BETWEEN\s+"
-    rf"(?P<lo>{_LIT})\s+<BTWAND>\s+(?P<hi>{_LIT})\s*$",
-    re.IGNORECASE,
-)
-_REV_OP = {"<": ">", ">": "<", "<=": ">=", ">=": "<=", "=": "="}
-
-
-def _lit_value(lit: str) -> object:
-    if lit.startswith("'"):
-        return lit[1:-1]
-    if "." in lit:
-        return float(lit)
-    return int(lit)
-
-
-def _simple_conjuncts(predicate: str) -> list[tuple[str, str, object]]:
-    """(column, op, payload) for every top-level AND conjunct of the
-    supported shapes — op ∈ {=, <, <=, >, >=} with a scalar payload,
-    ``in`` with a list payload, ``between`` with a (lo, hi) payload.
-    Literal-side-first comparisons are normalized (``5 > k`` ->
-    ``k < 5``).
-
-    OR/NOT bail-out (ADVICE r11 #1): splitting on ``AND`` is only a
-    conjunct decomposition when the predicate is a pure top-level
-    conjunction. ``a = 1 OR b = 2 AND c = 3`` splits into
-    ``a = 1 OR b = 2`` (ignored) and ``c = 3`` (matched) — but
-    ``c = 3`` is NOT a conjunct of that predicate (rows with a = 1
-    satisfy it regardless of c), so pruning on it would silently skip
-    matching files. Same for NOT: ``NOT (a = 1 AND b = 2)`` shears
-    into a fully-matching middle part. Any ``OR``/``NOT`` keyword
-    OUTSIDE a string literal therefore disables extraction entirely
-    (returns []); the caller's manifest route falls back to the exact
-    footer-stat scan — sound, just unpruned. The keyword scan runs on
-    the literal-MASKED text so a value like ``'majOR'`` cannot
-    false-positive (and a false positive would only cost pruning,
-    never correctness)."""
-    from openaq_data_pipeline_engineering_spark.operators.sqlmerge import (
-        _mask_literals,
-    )
-
-    if re.search(r"(?i)\b(?:OR|NOT)\b", _mask_literals(predicate)):
-        return []
-    masked = re.sub(
-        r"(?i)\bBETWEEN\s+(" + _LIT + r")\s+AND\s+",
-        lambda m: f"BETWEEN {m.group(1)} <BTWAND> ",
-        predicate,
-    )
-    out: list[tuple[str, str, object]] = []
-    for part in re.split(r"(?i)\bAND\b", masked):
-        m = _CONJ_RE.match(part)
-        if m:
-            out.append(
-                (m.group("col"), m.group("op"), _lit_value(m.group("lit")))
-            )
-            continue
-        rev = re.match(
-            rf"^\s*(?P<lit>{_LIT})\s*(?P<op><=|>=|=|<|>)\s*"
-            r"(?:(?P<q1>\w+)\s*\.\s*)?(?P<col>\w+)\s*$",
-            part,
-        )
-        if rev:
-            out.append(
-                (
-                    rev.group("col"),
-                    _REV_OP[rev.group("op")],
-                    _lit_value(rev.group("lit")),
-                )
-            )
-            continue
-        m = _IN_RE.match(part)
-        if m:
-            vals = [
-                _lit_value(x.strip())
-                for x in re.findall(_LIT, m.group("lits"))
-            ]
-            if vals:
-                out.append((m.group("col"), "in", vals))
-            continue
-        m = _BETWEEN_RE.match(part)
-        if m:
-            out.append(
-                (
-                    m.group("col"),
-                    "between",
-                    (_lit_value(m.group("lo")), _lit_value(m.group("hi"))),
-                )
-            )
-    return out
-
-
-def _literal_matches_family(payload: object, dtype) -> bool:
-    """True when pruning a conjunct with this literal payload against a
-    manifest column of ``dtype`` is SOUND (ADVICE r11 #4): the stored
-    min/max were computed in the COLUMN's order, but Spark evaluates
-    ``string_col = 5`` by casting the COLUMN to numeric per row — a
-    lexicographic [min, max] says nothing about the numeric range
-    ('40' < '5' lexicographically), so a numeric literal may only
-    prune NUMERIC manifest columns and a string literal only STRING
-    columns (same-order comparisons on both sides). Skipping a
-    mismatched conjunct just widens the candidate set."""
-    from pyspark.sql.types import NumericType, StringType
-
-    if dtype is None:
-        return False
-    vals = (
-        list(payload)
-        if isinstance(payload, (list, tuple))
-        else [payload]
-    )
-    if isinstance(dtype, NumericType):
-        return all(isinstance(x, (int, float)) for x in vals)
-    if isinstance(dtype, StringType):
-        return all(isinstance(x, str) for x in vals)
-    return False
-
-
-def _manifest_candidates(
-    spark: SparkSession, vdir: str, predicate: str
-) -> list[str] | None:
-    """Candidate file paths from the PERSISTED skipstats manifest
-    (VERDICT r10 #4) — None when the manifest route does not apply
-    (no manifest, no prunable conjunct, or the manifest is stale /
-    incomplete for this directory), in which case the caller falls
-    back to the footer-stat discovery scan.
-
-    Soundness: only conjuncts of the form ``col <op> literal`` on
-    manifest-covered columns prune; every other conjunct is ignored
-    (candidates only widen). Rows with NULL in a compared column can
-    never satisfy a comparison, so a file is excludable purely on its
-    non-null [min, max]. Staleness guard: the manifest's rel-path set
-    must EQUAL the directory's on-disk data files (one cheap listing,
-    no footer reads) — any mismatch (a purge rewrote the version in
-    place, a collision-renamed carry) disables the route."""
-    from pyspark.sql import functions as SF
-
-    from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-        SKIPSTATS_DIR,
-        manifest_key_cols,
-    )
-
-    mdir = os.path.join(vdir, SKIPSTATS_DIR)
-    if not os.path.isdir(mdir):
-        return None
-    mdf = spark.read.parquet(mdir)
-    covered = set(manifest_key_cols(mdf))
-    min_types = {
-        f.name[: -len("_min")]: f.dataType
-        for f in mdf.schema.fields
-        if f.name.endswith("_min")
-    }
-    conjs = [
-        (c, op, v)
-        for c, op, v in _simple_conjuncts(predicate)
-        if c in covered and _literal_matches_family(v, min_types.get(c))
-    ]
-    if not conjs:
-        return None
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        version_files_with_rels,
-    )
-
-    rel_to_abs = {r: p for p, r in version_files_with_rels(vdir)}
-    rels = [r["rel_path"] for r in mdf.select("rel_path").collect()]
-    if set(rels) != set(rel_to_abs) or len(rels) != len(rel_to_abs):
-        return None  # stale/incomplete manifest: fall back, stay exact
-    cond = None
-    for c, op, v in conjs:
-        lo, hi = SF.col(f"{c}_min"), SF.col(f"{c}_max")
-        if op == "in":
-            this = None
-            for x in v:  # union of point candidates
-                t = (lo <= SF.lit(x)) & (hi >= SF.lit(x))
-                this = t if this is None else this | t
-        elif op == "between":
-            b_lo, b_hi = v
-            this = (lo <= SF.lit(b_hi)) & (hi >= SF.lit(b_lo))
-        else:
-            this = {
-                "=": (lo <= SF.lit(v)) & (hi >= SF.lit(v)),
-                "<": lo < SF.lit(v),
-                "<=": lo <= SF.lit(v),
-                ">": hi > SF.lit(v),
-                ">=": hi >= SF.lit(v),
-            }[op]
-        cond = this if cond is None else cond & this
-    cands = [r["rel_path"] for r in mdf.filter(cond).select("rel_path").collect()]
-    return sorted(rel_to_abs[r] for r in cands)
-
-
 def touched_files_by_predicate(
     spark: SparkSession, vdir: str, predicate: str, alias: str | None = None
 ) -> list[str] | None:
@@ -528,39 +313,17 @@ def touched_files_by_predicate(
     the predicate is NOT safe to evaluate twice (non-deterministic or
     per-query-constant time functions, :func:`plan_is_cow_safe`):
     discovery and lowering could match different rows, leaving a
-    matched row in a carried file.
-
-    MANIFEST route (VERDICT r10 #4): when the version carries a
-    persisted skipstats sidecar (operators/skipstats.write_manifest)
-    and the predicate has a prunable ``col <op> literal`` conjunct on
-    a covered column, the exact scan is restricted to the manifest's
-    candidate files — discovery cost becomes one tiny manifest read
-    plus the candidates' footers instead of EVERY file's footer (at
-    2,000+ files per version the footer pass dominates; see PLANS.md
-    round-11 A/B). The restricted scan still evaluates the EXACT
-    predicate, so the touched set is identical to the full scan's."""
+    matched row in a carried file."""
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_dir,
-        read_version_subset,
     )
 
     df = read_version_dir(spark, vdir, file_col="__cow_file")
-    base_schema = df.drop("__cow_file").schema
     if alias:
         df = df.alias(alias)
     filtered = df.filter(F.expr(predicate))
     if not plan_is_cow_safe(filtered):
         return None
-    cands = _manifest_candidates(spark, vdir, predicate)
-    if cands is not None:
-        if not cands:
-            return []
-        sub = read_version_subset(
-            spark, vdir, cands, base_schema, file_col="__cow_file"
-        )
-        if alias:
-            sub = sub.alias(alias)
-        filtered = sub.filter(F.expr(predicate))
     rows = filtered.select("__cow_file").distinct().collect()
     return sorted(local_path(r["__cow_file"]) for r in rows)
 
@@ -593,147 +356,30 @@ def touched_files_by_join(
     return sorted(local_path(r["__cow_file"]) for r in rows)
 
 
-def _manifest_box_candidates(
-    spark: SparkSession, vdir: str, delta: DataFrame, keys: list[str]
-) -> list[str] | None:
-    """Manifest candidates for a keyed-upsert batch: files whose
-    per-key [min, max] ranges intersect the DELTA's overall key box —
-    one tiny aggregate over the collapsed micro-batch, one manifest
-    filter, zero data-file footers. Coarse but SOUND (a file outside
-    the box can hold no matching key; the exact semi join still runs
-    over the candidates). None when the route does not apply: no
-    manifest, a key column the manifest does not cover, a stale
-    manifest (same completeness check as the predicate route), or a
-    batch with NULL keys (manifest min/max exclude nulls, so the box
-    cannot bound null-safe matches)."""
-    from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-        SKIPSTATS_DIR,
-        manifest_key_cols,
-    )
-
-    mdir = os.path.join(vdir, SKIPSTATS_DIR)
-    if not os.path.isdir(mdir):
-        return None
-    mdf = spark.read.parquet(mdir)
-    if not set(keys) <= set(manifest_key_cols(mdf)):
-        return None
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        version_files_with_rels,
-    )
-
-    rel_to_abs = {r: p for p, r in version_files_with_rels(vdir)}
-    rels = [r["rel_path"] for r in mdf.select("rel_path").collect()]
-    if set(rels) != set(rel_to_abs) or len(rels) != len(rel_to_abs):
-        return None  # stale/incomplete manifest
-    aggs = []
-    for k in keys:
-        aggs.append(F.min(k).alias(f"__lo_{k}"))
-        aggs.append(F.max(k).alias(f"__hi_{k}"))
-        aggs.append(
-            F.sum(F.when(F.col(k).isNull(), 1).otherwise(0)).alias(
-                f"__nulls_{k}"
-            )
-        )
-    b = delta.agg(*aggs).first()
-    cond = None
-    for k in keys:
-        if b[f"__nulls_{k}"] or b[f"__lo_{k}"] is None:
-            return None  # null keys: the box cannot bound them
-        this = (F.col(f"{k}_min") <= F.lit(b[f"__hi_{k}"])) & (
-            F.col(f"{k}_max") >= F.lit(b[f"__lo_{k}"])
-        )
-        cond = this if cond is None else cond & this
-    cands = [
-        r["rel_path"] for r in mdf.filter(cond).select("rel_path").collect()
-    ]
-    return sorted(rel_to_abs[r] for r in cands)
-
-
 def touched_files_by_keys(
     spark: SparkSession, vdir: str, delta: DataFrame, keys: list[str]
 ) -> list[str] | None:
     """Data files of ``vdir`` holding at least one row whose key tuple
     appears in ``delta`` — the keyed-upsert form of discovery (one LEFT
     SEMI join on null-safe key equality; the delta's distinct key set
-    is tiny relative to the table and broadcasts). When the version
-    carries a skipstats manifest covering the key columns, the scan is
-    first restricted to the manifest's key-box candidates
-    (:func:`_manifest_box_candidates`) — a clustered sink's per-batch
-    discovery then opens only the candidate files' footers. Returns
-    None — full-rewrite fallback — when the delta's plan is unsafe to
-    evaluate twice (:func:`plan_is_cow_safe`)."""
+    is tiny relative to the table and broadcasts). Returns None —
+    full-rewrite fallback — when the join, whose plan contains the
+    delta's, is unsafe to evaluate twice (:func:`plan_is_cow_safe`)."""
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_dir,
-        read_version_subset,
     )
 
-    t = read_version_dir(spark, vdir, file_col="__cow_file")
-    base_schema = t.drop("__cow_file").schema
+    t = read_version_dir(spark, vdir, file_col="__cow_file").alias("__cow_t")
     d = F.broadcast(delta.select(*keys).distinct()).alias("__cow_d")
-
-    def _discover(frame: DataFrame) -> list[str]:
-        # frame already carries __cow_file (materialized per scan
-        # group — the _metadata pseudo-column doesn't survive a union)
-        tt = frame.alias("__cow_t")
-        cond = None
-        for k in keys:
-            this = F.col(f"__cow_t.{k}").eqNullSafe(F.col(f"__cow_d.{k}"))
-            cond = this if cond is None else cond & this
-        joined = tt.join(d, cond, "left_semi")
-        if not plan_is_cow_safe(joined):
-            return None
-        rows = joined.select("__cow_file").distinct().collect()
-        return sorted(local_path(r["__cow_file"]) for r in rows)
-
-    if not plan_is_cow_safe(delta):
+    cond = None
+    for k in keys:
+        this = F.col(f"__cow_t.{k}").eqNullSafe(F.col(f"__cow_d.{k}"))
+        cond = this if cond is None else cond & this
+    joined = t.join(d, cond, "left_semi")
+    if not plan_is_cow_safe(joined):
         return None
-    cands = _manifest_box_candidates(spark, vdir, delta, keys)
-    if cands is not None:
-        if not cands:
-            return []
-        return _discover(
-            read_version_subset(
-                spark, vdir, cands, base_schema, file_col="__cow_file"
-            )
-        )
-    return _discover(t)
-
-
-def link_files(srcs: list[str], dst_dir: str, prefix: str = "carried") -> int:
-    """Hardlink every file in ``srcs`` into ``dst_dir`` (collision-
-    renamed with ``prefix``; cross-device falls back to a real copy).
-    Returns the total bytes carried. The shared carry primitive of the
-    COW commit, the zero-copy rebase, and the file-granular purge."""
-    os.makedirs(dst_dir, exist_ok=True)
-    total = 0
-    for src in srcs:
-        dst = os.path.join(dst_dir, os.path.basename(src))
-        n = 0
-        while os.path.exists(dst):
-            n += 1
-            dst = os.path.join(
-                dst_dir, f"{prefix}-{n}-{os.path.basename(src)}"
-            )
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-        total += os.path.getsize(src)
-    return total
-
-
-def is_flat_dir(vdir: str) -> bool:
-    """True when every data file sits directly under ``vdir`` (no Hive
-    partition subdirectories — the layout a flat carry preserves).
-    Fileset versions judge their ENTRY rel paths, not the (possibly
-    empty) local directory."""
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        version_files_with_rels,
-    )
-
-    return all(
-        os.sep not in rel for _p, rel in version_files_with_rels(vdir)
-    )
+    rows = joined.select("__cow_file").distinct().collect()
+    return sorted(local_path(r["__cow_file"]) for r in rows)
 
 
 def partition_layout(vdir: str) -> list[str] | None:
@@ -860,28 +506,6 @@ def preserve_partition_spelling(
     return moved
 
 
-def read_touched_subset(
-    spark: SparkSession, vdir: str, touched: list[str], schema
-) -> DataFrame:
-    """Read exactly the touched files of a base version, with the SAME
-    schema a full read of ``vdir`` produces. ``basePath`` keeps the
-    files' ``key=value/`` path segments resolving to partition columns
-    (a bare file-list read would drop them), and the EXPLICIT schema
-    pins the partition-column types to the full directory's inferred
-    types — inference over the touched subset alone could narrow
-    differently (e.g. the one touched directory is all-numeric while a
-    sibling holds a non-numeric value) and a type mismatch would
-    spuriously fail the schema-preservation gate. On a FILESET version
-    the touched files live under their OWNER versions' directories, so
-    the read groups per owner ``basePath`` (filesets.read_version_subset)
-    instead of assuming one common root."""
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        read_version_subset,
-    )
-
-    return read_version_subset(spark, vdir, touched, schema)
-
-
 def link_files_relative(
     srcs: list[str], src_root: str, dst_root: str, prefix: str = "carried"
 ) -> int:
@@ -889,8 +513,10 @@ def link_files_relative(
     ``dst_root`` at the SAME relative subpath — the partition-aware
     carry: ``.../month=01/part-x.parquet`` lands under
     ``<dst>/month=01/``, so carried files keep the directory-encoded
-    partition values a flat carry would drop. Flat sources (relpath =
-    basename) degenerate to :func:`link_files` behavior. Collisions
+    partition values a flat carry would drop. The file-granular purge
+    (versioned.purge_rows) carries its untouched files this way,
+    because it rewrites a version in place; the COW commit and the
+    zero-copy rebase carry through fileset entries instead. Collisions
     rename with ``prefix``; cross-device falls back to a real copy.
     Returns total bytes carried."""
     total = 0
@@ -955,10 +581,9 @@ def _try_conflict_merge(
     matching rows by the rescan) and rewrite it from identical inputs
     to identical outputs — so committing the existing rewrite ON TOP
     of the head's file set preserves full SERIALIZABILITY, not just
-    write-serializability. Returns ``(head, head_vdir,
-    carried_entries, bytes_carried, rescanned_files)`` or ``None`` to
-    decline (caller re-raises; the statement-level retry re-executes,
-    which is always correct)."""
+    write-serializability. Returns ``(head, carried_entries,
+    bytes_carried)`` or ``None`` to decline (caller re-raises; the
+    statement-level retry re-executes, which is always correct)."""
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_subset,
         version_entry_map,
@@ -1013,7 +638,7 @@ def _try_conflict_merge(
             {"v": int(owner), "rel": rel, "size": int(size)}
         )
         bytes_carried += int(size)
-    return head, head_vdir, carried_entries, bytes_carried, len(added)
+    return head, carried_entries, bytes_carried
 
 
 def commit_file_rewrite(
@@ -1104,6 +729,7 @@ def commit_file_rewrite(
         )
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_dir,
+        read_version_subset,
         version_entry_map,
         write_fileset,
     )
@@ -1196,7 +822,7 @@ def commit_file_rewrite(
         keys = _read_manifest_doc(root)["cdf_keys"]
         if keys:
             if touched_set:
-                pre = read_touched_subset(
+                pre = read_version_subset(
                     spark, vdir_base, sorted(touched_set), base_schema
                 )
             else:
@@ -1258,7 +884,6 @@ def commit_file_rewrite(
                 base_schema.jsonValue(),
                 entries,
             )
-        _carry_manifest(spark, vdir_base, new_dir)
         import json
 
         with open(os.path.join(new_dir, COW_STATS_SIDECAR), "w") as f:
@@ -1310,7 +935,7 @@ def commit_file_rewrite(
                 )
                 if m is None:
                     raise
-                head, head_vdir, carried_entries, bytes_carried, _n = m
+                head, carried_entries, bytes_carried = m
                 if candidate <= head:
                     # A full commit numbered below the head would be
                     # history-only (no latest reader ever resolves it)
@@ -1353,9 +978,6 @@ def commit_file_rewrite(
                 from openaq_data_pipeline_engineering_spark.operators.filesets import (
                     FILESET_SIDECAR,
                 )
-                from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-                    SKIPSTATS_DIR,
-                )
 
                 if carried_entries:
                     write_fileset(
@@ -1369,14 +991,6 @@ def commit_file_rewrite(
                         os.remove(os.path.join(new_dir, FILESET_SIDECAR))
                     except FileNotFoundError:
                         pass
-                # Refresh the skipstats carry against the NEW base (the
-                # first attempt's manifest inherited rows from the OLD
-                # base's carried set; best-effort as always).
-                shutil.rmtree(
-                    os.path.join(new_dir, SKIPSTATS_DIR),
-                    ignore_errors=True,
-                )
-                _carry_manifest(spark, head_vdir, new_dir)
                 conflict_merges += 1
                 files_carried_n = len(carried_entries)
                 with open(
@@ -1464,6 +1078,7 @@ def commit_rewrite(
     """
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_dir,
+        read_version_subset,
     )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         ConcurrentWriteError,
@@ -1490,7 +1105,7 @@ def commit_rewrite(
                     # keep their key=value partition columns
                     base_df = read_version_dir(spark, vdir)
                     partial = lower(
-                        read_touched_subset(
+                        read_version_subset(
                             spark, vdir, touched, base_df.schema
                         )
                         if touched
@@ -1517,80 +1132,6 @@ def commit_rewrite(
         except ConcurrentWriteError as e:
             err = e
     raise err
-
-
-def _carry_manifest(spark: SparkSession, vdir_base: str, new_dir: str) -> None:
-    """Maintain the persisted skipstats manifest ACROSS a COW commit
-    (VERDICT r10 #4): when the base version carries one, the new
-    version gets a manifest too — carried files' stats rows copy
-    forward verbatim (a carried entry keeps its content AND its rel
-    path), and only the files NOT inherited by rel path (the rewritten
-    files, plus any collision-renamed carry) get fresh stats from one
-    scan bounded to exactly those files. Maintenance cost O(touched),
-    matching the commit itself — the manifest never needs a full-table
-    rebuild (Delta's per-file stats ride the commit log the same way).
-    Best-effort: any failure leaves the new version without a manifest
-    (discovery falls back to the footer scan — correct, just slower).
-    The candidate-rel filter uses an ``isin`` literal list (fine at
-    thousands of files; a million-file table would broadcast-join the
-    listing instead)."""
-    from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-        SKIPSTATS_DIR,
-        file_stats,
-        manifest_key_cols,
-        relativize_stats,
-    )
-
-    mdir = os.path.join(vdir_base, SKIPSTATS_DIR)
-    if not os.path.isdir(mdir):
-        return
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        read_version_dir,
-        version_files_with_rels,
-    )
-
-    try:
-        mdf = spark.read.parquet(mdir)
-        cols = manifest_key_cols(mdf)
-        # Fileset-aware rel sets: a carried entry keeps its
-        # rel-within-owner, so its stats row inherits verbatim; only
-        # rels NEW to this version (the rewritten local files, plus any
-        # collision-copied carry) get fresh stats — and those are
-        # always physically inside new_dir.
-        new_rels = {r for _p, r in version_files_with_rels(new_dir)}
-        base_rels = {r for _p, r in version_files_with_rels(vdir_base)}
-        inherited = sorted(new_rels & base_rels)
-        fresh = sorted(new_rels - base_rels)
-        parts = []
-        if inherited:
-            parts.append(mdf.filter(F.col("rel_path").isin(inherited)))
-        if fresh:
-            fdf = spark.read.schema(
-                read_version_dir(spark, new_dir).schema
-            ).option("basePath", new_dir).parquet(
-                *[os.path.join(new_dir, r) for r in fresh]
-            )
-            parts.append(
-                relativize_stats(
-                    file_stats(fdf, cols, use_path=True), new_dir
-                )
-            )
-        if not parts:
-            return
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(new_dir, SKIPSTATS_DIR)
-        )
-    except Exception:
-        # optimization only — a half-written manifest must not survive
-        # (the consumer's completeness check would reject it anyway,
-        # but don't leave debris), and a manifest failure must never
-        # fail the COMMIT
-        shutil.rmtree(
-            os.path.join(new_dir, SKIPSTATS_DIR), ignore_errors=True
-        )
 
 
 def last_cow_stats(root: str) -> dict | None:

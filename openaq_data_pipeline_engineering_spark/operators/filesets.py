@@ -251,12 +251,20 @@ def read_version_subset(
     file_col: str | None = None,
 ) -> DataFrame:
     """Read exactly ``files`` (a subset of the version at ``vdir``)
-    under the PINNED ``schema`` — the fileset-aware form of the COW
-    read_touched_subset: each physical base directory reads with its
-    own ``basePath`` so partition-value path segments survive, and the
-    explicit schema keeps partition-column types identical across
-    owner groups. ``file_col`` materializes ``_metadata.file_path``
-    per group (the pseudo-column does not survive a union). A FLAT
+    under ``schema``, the schema a full read of ``vdir`` produces — the
+    COW commit's read of its touched files, OPTIMIZE INCREMENTAL's
+    packed files and the file-granular purge's kept rows. Each physical base
+    directory reads with its own ``basePath``, so ``key=value/`` path
+    segments resolve to partition columns (a bare file-list read would
+    drop them); on a FILESET version the files live under their OWNER
+    versions' directories, hence one group per owner. The EXPLICIT
+    ``schema`` pins the partition-column types to the full directory's
+    inferred types: inference over the subset alone could narrow
+    differently (e.g. the one touched directory is all-numeric while a
+    sibling holds a non-numeric value), and the mismatch would
+    spuriously fail the COW schema-preservation gate. ``file_col``
+    materializes ``_metadata.file_path`` per group (the pseudo-column
+    does not survive a union). A FLAT
     fileset version reads its subset as one scan relation — no
     basePath or union needed when no partition values live in the
     paths."""

@@ -5,8 +5,10 @@ At 100 TB a query with a selective key predicate should not open every
 file: engines keep a manifest of per-file [min, max] ranges and prune
 files whose range cannot contain the predicate value (Delta/Iceberg
 data skipping; Parquet row-group stats do the same one level down).
-This operator materializes that manifest as a DataFrame so it can be
-persisted next to the data and consulted before planning a scan.
+This operator builds that manifest as a DataFrame over a file scan
+and prunes a read through it; nothing persists it. Copy-on-write DML
+discovery (operators/cow.py) does not use it: its exact scan lets the
+Parquet reader skip row groups on the pushed predicate instead.
 
 Spark-first shape: the stats pass is one aggregation keyed by
 `_metadata.file_name` — shuffle bounded by |files|, map-side combined.
@@ -15,8 +17,6 @@ re-read; no driver-side file walking.
 """
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -105,133 +105,6 @@ def candidate_files_box(
         )
         cond = this if cond is None else cond & this
     return stats.filter(cond).select("file_name")
-
-
-# ---------------------------------------------------------------------------
-# PERSISTED manifest (VERDICT r10 #4): the DataFrame manifest above,
-# materialized as a `_skipstats/` parquet sidecar INSIDE a versioned
-# table's immutable version directory, keyed by the data file's path
-# RELATIVE to its OWNING directory (stable under BOTH carry models —
-# a fileset-referenced file keeps its rel-within-owner, a hardlinked
-# file its rel path — so COW commits carry stats rows forward
-# verbatim). DML touched-file discovery consults it before the footer
-# scan: at ~2,000+ files per version the discovery job stops opening
-# every footer and reads one tiny manifest instead.
-# ---------------------------------------------------------------------------
-
-SKIPSTATS_DIR = "_skipstats"
-
-
-def write_manifest(
-    spark, vdir: str, key_cols: list[str]
-) -> int:
-    """Materialize the per-file min/max manifest for every data file of
-    ``vdir`` into ``<vdir>/_skipstats/`` (underscore-prefixed:
-    invisible to every data read). Returns the number of files
-    described. One aggregation keyed by ``_metadata.file_path``
-    (shuffle ∝ |files|, map-side combined); the path is relativized
-    DISTRIBUTEDLY (no driver-side file loop).
-
-    PARTITION columns are included automatically (VERDICT r11 #6):
-    they surface as ordinary columns of the directory read, so their
-    per-file min/max (min == max — one value per file, from its
-    ``key=value/`` path) record for free, and a DML predicate on a
-    partition column then prunes from the SAME single manifest read as
-    a data-column predicate instead of falling through to the footer
-    scan.
-
-    FILESET versions (the r12 COW carry, operators/filesets.py) are
-    supported: stats compute per owner group and relativize to each
-    OWNER's directory, so the manifest's ``rel_path`` values equal the
-    sidecar's entry rels — exactly what the discovery routes'
-    completeness check compares against."""
-    import os
-
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        fileset_schema,
-        group_files_by_base,
-        read_fileset,
-        version_data_files,
-    )
-
-    fs = read_fileset(vdir)
-    if fs is None:
-        df = spark.read.parquet(vdir)
-        part_cols = [
-            c
-            for c in _dir_partition_cols(vdir)
-            if c in df.columns and c not in key_cols
-        ]
-        cols = list(key_cols) + part_cols
-        # Spark renders local file paths as "file:<abs>"; strip the
-        # vdir prefix to the rel path (file: / file:// both guarded).
-        out = relativize_stats(file_stats(df, cols, use_path=True), vdir)
-    else:
-        schema = fileset_schema(spark, fs)
-        names = {f.name for f in schema.fields}
-        part_cols = [
-            c for c in fs["layout"] if c in names and c not in key_cols
-        ]
-        cols = list(key_cols) + part_cols
-        parts = []
-        for d, files in group_files_by_base(
-            vdir, version_data_files(vdir)
-        ):
-            g = spark.read.schema(schema).option("basePath", d).parquet(
-                *files
-            )
-            parts.append(
-                relativize_stats(file_stats(g, cols, use_path=True), d)
-            )
-        if not parts:
-            return 0
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-    out.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(vdir, SKIPSTATS_DIR)
-    )
-    return int(
-        spark.read.parquet(os.path.join(vdir, SKIPSTATS_DIR)).count()
-    )
-
-
-def _dir_partition_cols(vdir: str) -> list[str]:
-    """Hive partition-column sequence of ``vdir`` from one data file's
-    relative path ([] for flat/empty) — one walk step, driver-side."""
-    import os
-
-    for dirpath, _dn, files in os.walk(vdir):
-        rel = os.path.relpath(dirpath, vdir)
-        if rel != "." and rel.split(os.sep)[0].startswith(("_", ".")):
-            continue
-        for f in files:
-            if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                continue
-            segs = [] if rel == "." else rel.split(os.sep)
-            return [s.split("=", 1)[0] for s in segs if "=" in s]
-    return []
-
-
-def manifest_key_cols(mdf: DataFrame) -> list[str]:
-    """The key columns a persisted manifest describes (every ``*_min``
-    column name, order preserved)."""
-    return [c[: -len("_min")] for c in mdf.columns if c.endswith("_min")]
-
-
-def relativize_stats(stats: DataFrame, vdir: str) -> DataFrame:
-    """``file_stats(..., use_path=True)`` output -> persisted-manifest
-    row shape: the absolute ``file_name`` URI becomes ``rel_path``
-    relative to ``vdir`` (distributed regexp, no driver loop)."""
-    import os
-
-    abs_dir = os.path.abspath(vdir)
-    rel = F.regexp_replace(
-        F.regexp_replace("file_name", "^file:(//)?", ""),
-        "^" + re.escape(abs_dir) + "/",
-        "",
-    )
-    return stats.withColumn("rel_path", rel).drop("file_name")
 
 
 def pruned_read_box(

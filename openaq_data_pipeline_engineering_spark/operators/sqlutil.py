@@ -543,7 +543,7 @@ def _optimize_incremental(
     is nothing to pack — returns the current version's metrics row
     WITHOUT committing (no version churn), like the zero-match DML
     no-op. The rewrite reuses the COW commit protocol end-to-end
-    (constraints, skipstats carry, CDF empty-diff, CAS publish), so a
+    (constraints, fileset carry, CDF empty-diff, CAS publish), so a
     concurrent writer conflicts exactly like any DML."""
     import math
 
@@ -551,7 +551,6 @@ def _optimize_incremental(
         COMMIT_ATTEMPTS,
         commit_file_rewrite,
         ensure_cow_base,
-        read_touched_subset,
         recorded_layout,
         resolve_base_dir,
     )
@@ -560,6 +559,7 @@ def _optimize_incremental(
     )
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_dir,
+        read_version_subset,
         version_files_with_rels,
     )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
@@ -605,7 +605,7 @@ def _optimize_incremental(
                 "n_files_before int, n_files_after int, n_rows bigint",
             )
         schema = read_version_dir(spark, vdir).schema
-        packed = read_touched_subset(spark, vdir, touched, schema)
+        packed = read_version_subset(spark, vdir, touched, schema)
         n_out = max(1, math.ceil(small_bytes / target_bytes))
         if layout:
             packed = packed.repartition(

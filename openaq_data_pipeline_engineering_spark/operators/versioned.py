@@ -2803,8 +2803,10 @@ def purge_rows(
             from openaq_data_pipeline_engineering_spark.operators.cow import (
                 link_files_relative,
                 partition_layout,
-                read_touched_subset,
                 touched_files_by_predicate,
+            )
+            from openaq_data_pipeline_engineering_spark.operators.filesets import (
+                read_version_subset,
             )
 
             layout = partition_layout(path)
@@ -2827,7 +2829,7 @@ def purge_rows(
                     }
                     - {os.path.realpath(p) for p in touched}
                 )
-                kept = read_touched_subset(
+                kept = read_version_subset(
                     spark, path, touched, df.schema
                 ).filter(~matches)
                 w = kept.write.mode("overwrite")

@@ -92,12 +92,10 @@ def upsert_batch(
     # this same batch at any point. No conflict rescan: keyed batches
     # serialize and retry.
     # FILE-GRANULAR commit: the merge runs over ONLY the files whose
-    # keys the batch touches. When the version carries a skipstats
-    # manifest, discovery first keeps the files whose key box meets the
-    # batch's (no data footer read); then one broadcast left-semi join
-    # on the collapsed batch's key set over those candidates. Every
-    # other file is carried as a fileset sidecar entry. Per-batch write
-    # I/O is O(touched files + batch).
+    # keys the batch touches, found by one broadcast left-semi join of
+    # the base version on the collapsed batch's key set. Every other
+    # file is carried as a fileset sidecar entry. Per-batch write I/O
+    # is O(touched files + batch).
     commit_rewrite(
         spark,
         target_dir,

@@ -7,8 +7,7 @@ OWNER version — zero link/copy syscalls for the carry, on every store.
 These tests pin the protocol consequences: owner propagation across
 chained DML, reader resolution (latest / time travel / chains / CDF),
 vacuum's owner protection and post-materialization reclamation, clone
-and restore composition, purge materialization, and the skipstats
-manifest riding the reference carry.
+and restore composition, and purge materialization.
 """
 
 from __future__ import annotations
@@ -438,59 +437,6 @@ class TestFilesetCloneRestore:
 
 
 class TestFilesetDiscoveryIntegration:
-    def test_skipstats_manifest_rides_the_reference_carry(
-        self, spark, tmp_path
-    ):
-        from openaq_data_pipeline_engineering_spark.operators.cow import (
-            _manifest_candidates,
-        )
-        from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-            write_manifest,
-        )
-
-        root = _seed_flat(spark, tmp_path, n=400, files=8)
-        write_manifest(spark, os.path.join(root, "v=1"), ["k"])
-        eng = Engine(spark)
-        eng.sql(f"UPDATE '{root}' SET score = 0.0 WHERE k = 5")  # v2 fileset
-        v2 = os.path.join(root, "v=2")
-        assert is_fileset_dir(v2)
-        assert os.path.isdir(os.path.join(v2, "_skipstats"))
-        # manifest pruning works against the fileset version: the
-        # completeness check compares rels against ENTRY rels, and
-        # candidates resolve to owner-physical paths
-        cands = _manifest_candidates(spark, v2, "k = 5")
-        assert cands is not None and len(cands) < 8
-        on_disk = set(version_data_files(v2))
-        assert set(cands) <= on_disk
-        # second DML uses the pruned discovery end-to-end
-        eng.sql(f"UPDATE '{root}' SET score = 777.0 WHERE k = 5")
-        out = read_snapshot(spark, root)
-        assert out.filter("k = 5").first()["score"] == 777.0
-        assert out.count() == 400
-
-    def test_write_manifest_directly_on_fileset_version(
-        self, spark, tmp_path
-    ):
-        """write_manifest on a fileset version computes stats per
-        OWNER group, keyed by the entry rels — the same rel space the
-        completeness check compares against."""
-        from openaq_data_pipeline_engineering_spark.operators.cow import (
-            _manifest_candidates,
-        )
-        from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-            write_manifest,
-        )
-
-        root = _seed_partitioned(spark, tmp_path)
-        Engine(spark).sql(f"UPDATE '{root}' SET score = 0.0 WHERE g = 1")
-        v2 = os.path.join(root, "v=2")
-        assert is_fileset_dir(v2)
-        n = write_manifest(spark, v2, ["k"])
-        assert n == len(version_data_files(v2))
-        cands = _manifest_candidates(spark, v2, "g = 2")
-        assert cands is not None
-        assert cands and all(f"{os.sep}g=2{os.sep}" in p for p in cands)
-
     def test_version_files_with_rels_is_owner_relative(
         self, spark, tmp_path
     ):

@@ -1,9 +1,8 @@
 """Round-12 ADVICE fixes (ADVICE r11 #1–#5).
 
-1. ``_simple_conjuncts`` must bail on OR/NOT predicates: splitting on
-   AND is only a conjunct decomposition for pure conjunctions, and a
-   sheared OR part would prune files that DO hold matching rows —
-   silent UPDATE/DELETE data loss whenever a skipstats manifest exists.
+1. An UPDATE whose predicate mixes OR and AND must rewrite every
+   file holding a matching row: a sheared OR part that pruned files
+   DO holding matches would be silent UPDATE/DELETE data loss.
 2. ``commit_file_rewrite`` on a partitioned base where EVERY file is
    touched and the rewrite is empty must leave a servable version
    (one empty flat file), not a zero-file directory that bricks the
@@ -12,9 +11,9 @@
    functions (current_date() retention purges) must take the
    single-evaluation whole-version rewrite, not crash on
    ``touched is None``.
-4. ``_manifest_candidates`` must not prune a numeric literal against a
-   lexicographic STRING min/max ('40' < '5' lexicographically — the
-   range says nothing about the numeric order Spark compares in).
+4. A numeric literal against a STRING column must match by Spark's
+   numeric comparison, never by the lexicographic order of stored
+   strings ('40' < '5' lexicographically).
 5. ``append_rows`` must reject a batch whose partition-column TYPE
    mismatches the base's inferred type, instead of silently widening
    the whole table's partition column on the next read.
@@ -27,9 +26,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from openaq_data_pipeline_engineering_spark.operators.cow import (
-    _simple_conjuncts,
-)
 from openaq_data_pipeline_engineering_spark.operators.versioned import (
     PartitionedAppendError,
     append_rows,
@@ -40,36 +36,12 @@ from openaq_data_pipeline_engineering_spark.operators.versioned import (
 
 
 class TestConjunctsOrNotBail:
-    def test_pure_and_still_extracts(self):
-        got = _simple_conjuncts("a = 1 AND b <= 2.5 AND c IN (3, 4)")
-        assert ("a", "=", 1) in got
-        assert ("b", "<=", 2.5) in got
-        assert ("c", "in", [3, 4]) in got
-
-    def test_or_with_and_extracts_nothing(self):
-        # ADVICE r11 #1's exact shape: a = 1 OR (b = 2 AND c = 3) —
-        # 'c = 3' is NOT a conjunct; extracting it would prune files
-        # whose only matches are a = 1 rows.
-        assert _simple_conjuncts("a = 1 OR b = 2 AND c = 3") == []
-
-    def test_not_around_conjunction_extracts_nothing(self):
-        assert _simple_conjuncts("NOT (a = 1 AND b = 2 AND c = 3)") == []
-
-    def test_or_inside_string_literal_is_fine(self):
-        got = _simple_conjuncts("name = 'majOR' AND k = 5")
-        assert ("k", "=", 5) in got
-
     def test_manifest_route_update_with_or_predicate_is_exact(
         self, spark, tmp_path
     ):
-        # End-to-end: manifest present, OR+AND predicate. Before the
-        # fix the manifest route pruned on the sheared 'c = 3'
-        # conjunct and the a = 1 rows in other files were silently
-        # carried unmodified.
+        # OR+AND predicate: pruning on the sheared 'c = 3' conjunct
+        # would carry the a = 1 rows in other files unmodified.
         from openaq_data_pipeline_engineering_spark.engine import Engine
-        from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-            write_manifest,
-        )
 
         root = str(tmp_path / "t")
         df = spark.createDataFrame(
@@ -77,9 +49,6 @@ class TestConjunctsOrNotBail:
             "a int, b int, c int",
         )
         write_snapshot(df.repartition(4, "a"), root)
-        write_manifest(
-            spark, os.path.join(root, "v=1"), ["a", "b", "c"]
-        )
         Engine(spark).sql(
             f"UPDATE '{root}' SET b = -1 WHERE a = 1 OR a = 2 AND c = 9"
         ).first()
@@ -140,19 +109,15 @@ class TestManifestTypeFamilyGuard:
         self, spark, tmp_path
     ):
         from openaq_data_pipeline_engineering_spark.engine import Engine
-        from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-            write_manifest,
-        )
 
         root = str(tmp_path / "t")
         # one file holds k='5' and k='40': lexicographic min='40',
-        # max='5'; numeric predicate k = 5 would coerce '40'->40 <= 5
-        # = false and unsoundly prune the file
+        # max='5'; pruning numeric k = 5 on that range ('40'->40 <= 5
+        # = false) would unsoundly skip the file
         df = spark.createDataFrame(
             [("5", 1), ("40", 2), ("7", 3), ("9", 4)], "k string, v int"
         )
         write_snapshot(df.coalesce(1), root)
-        write_manifest(spark, os.path.join(root, "v=1"), ["k"])
         Engine(spark).sql(
             f"UPDATE '{root}' SET v = -1 WHERE k = 5"
         ).first()
@@ -330,45 +295,14 @@ class TestPartitionSpellingPreserved:
 
 
 class TestPartitionValueManifestPruning:
-    """VERDICT r11 #6: the skipstats manifest records partition values
-    as columns, so a partition-key predicate prunes from the same
-    single manifest read as a data-column predicate."""
-
-    def test_partition_predicate_prunes_to_one_partition(
-        self, spark, tmp_path
-    ):
-        from openaq_data_pipeline_engineering_spark.operators import compact
-        from openaq_data_pipeline_engineering_spark.operators.cow import (
-            _manifest_candidates,
-        )
-        from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-            write_manifest,
-        )
-
-        root = str(tmp_path / "t")
-        df = spark.createDataFrame(
-            [(i, i % 4, float(i)) for i in range(80)],
-            "k long, g int, score double",
-        )
-        write_snapshot(df.repartition(4, "k"), root, partition_by=["g"])
-        vdir = os.path.join(root, "v=1")
-        write_manifest(spark, vdir, ["k"])  # g auto-included
-        cands = _manifest_candidates(spark, vdir, "g = 2")
-        expect = sorted(
-            p
-            for p in compact.iter_data_parquet_files(vdir)
-            if f"{os.sep}g=2{os.sep}" in p
-        )
-        assert cands == expect and len(expect) > 0
+    """VERDICT r11 #6: a DML predicate on a partition column rewrites
+    only that partition's files and carries the rest."""
 
     def test_dml_on_partition_key_stays_exact(self, spark, tmp_path):
         from openaq_data_pipeline_engineering_spark.engine import Engine
         from openaq_data_pipeline_engineering_spark.operators.cow import (
             last_cow_stats,
         )
-        from openaq_data_pipeline_engineering_spark.operators.skipstats import (
-            write_manifest,
-        )
 
         root = str(tmp_path / "t")
         df = spark.createDataFrame(
@@ -376,7 +310,6 @@ class TestPartitionValueManifestPruning:
             "k long, g int, score double",
         )
         write_snapshot(df.repartition(4, "k"), root, partition_by=["g"])
-        write_manifest(spark, os.path.join(root, "v=1"), ["k"])
         Engine(spark).sql(
             f"DELETE FROM '{root}' WHERE g = 2"
         ).first()
