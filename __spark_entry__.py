@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash); ``tools/diffcheck.py`` runs the same
+differential locally with exact value equality.
 
 The actual implementations live in the package; this file is a thin
 adapter over openaq_data_pipeline_engineering_spark.plans.registry.

@@ -648,7 +648,6 @@ def commit_file_rewrite(
     rewritten: DataFrame,
     touched: list[str],
     txn_id: str | None = None,
-    _max_claim_retries: int = 16,
     conflict_rescan=None,
 ) -> int:
     """Publish a new version whose content is ``rewritten`` (the
@@ -696,27 +695,16 @@ def commit_file_rewrite(
     both writers' changes land, with ONE rewrite each, the shape that
     keeps many concurrent single-partition writers linear at 100 TB.
     """
-    from openaq_data_pipeline_engineering_spark.operators.metastore import (
-        get_metadata_store,
-    )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
+        CLAIM_ATTEMPTS,
         ConcurrentWriteError,
         _change_rows,
+        _claim_next_version,
         _commit_version,
         _enforce_constraints,
-        _existing_version_dirs,
-        _read_manifest,
         _read_manifest_doc,
-        _read_manifest_full,
     )
 
-    if txn_id is not None:
-        # Idempotent replay short-circuits BEFORE any work, matching
-        # write_snapshot's entry check (the commit re-checks under CAS).
-        _, txns = _read_manifest_full(root)
-        if txn_id in txns:
-            return txns[txn_id]
-    store = get_metadata_store()
     vdir_base = resolve_base_dir(root, base)
     layout = recorded_layout(root, base)
     if layout is None:  # pre-r12 version: pay the verification walk
@@ -752,17 +740,11 @@ def commit_file_rewrite(
         )
     carried = sorted(all_files - touched_set)
 
-    for _ in range(_max_claim_retries):
-        candidate = (
-            max(_read_manifest(root) + _existing_version_dirs(root), default=0)
-            + 1
-        )
-        if store.claim_version_dir(root, candidate):
-            break
-    else:
+    candidate = _claim_next_version(root)
+    if candidate is None:
         raise RuntimeError(
             f"could not allocate a version under {root} after "
-            f"{_max_claim_retries} attempts"
+            f"{CLAIM_ATTEMPTS} attempts"
         )
     new_dir = os.path.join(root, f"v={candidate}")
     try:
@@ -942,18 +924,8 @@ def commit_file_rewrite(
                     # or rejected by the out-of-order guard: re-claim a
                     # number above the head and move OUR files there —
                     # driver-side renames ∝ rewritten files only.
-                    for _ in range(_max_claim_retries):
-                        cand2 = (
-                            max(
-                                _read_manifest(root)
-                                + _existing_version_dirs(root),
-                                default=0,
-                            )
-                            + 1
-                        )
-                        if store.claim_version_dir(root, cand2):
-                            break
-                    else:
+                    cand2 = _claim_next_version(root)
+                    if cand2 is None:
                         raise
                     new_dir2 = os.path.join(root, f"v={cand2}")
                     for name in os.listdir(new_dir):
@@ -1074,7 +1046,9 @@ def commit_rewrite(
     No-op shape (Delta's): a statement that touches no file and whose
     lowering adds no row commits nothing and returns the base version.
     A ``txn_id`` commit always lands, because its txn entry is what
-    makes a replay of the same micro-batch a no-op.
+    makes a replay of the same micro-batch a no-op: each attempt first
+    looks the txn up and returns its committed version before any
+    Spark job runs (the commit re-checks it under CAS).
     """
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_dir,
@@ -1082,6 +1056,7 @@ def commit_rewrite(
     )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         ConcurrentWriteError,
+        _read_manifest_full,
         read_snapshot,
         snapshot_versions,
         write_snapshot,
@@ -1090,6 +1065,10 @@ def commit_rewrite(
     for _ in range(COMMIT_ATTEMPTS):
         versions = snapshot_versions(root)
         base = versions[-1] if versions else 0
+        if txn_id is not None:
+            _, txns = _read_manifest_full(root)
+            if txn_id in txns:
+                return txns[txn_id], base
         try:
             cow_base = (
                 ensure_cow_base(spark, root)

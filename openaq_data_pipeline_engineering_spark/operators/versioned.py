@@ -325,7 +325,6 @@ def _dir_layout_cheap(d: str) -> list[str] | None:
 def write_snapshot(
     df: DataFrame,
     root: str,
-    _max_retries: int = 16,
     txn_id: str | None = None,
     expected_latest: int | None = None,
     partition_by: list[str] | None = None,
@@ -414,10 +413,8 @@ def write_snapshot(
         _, txns = _read_manifest_full(root)
         if txn_id in txns:
             return txns[txn_id]  # replay: already committed, no write
-    for attempt in range(_max_retries):
-        version = _allocate_and_write(
-            df, root, _max_retries, partition_by=partition_by
-        )
+    for attempt in range(CLAIM_ATTEMPTS):
+        version = _allocate_and_write(df, root, partition_by=partition_by)
         validated = _enforce_constraints(df.sparkSession, root, version)
         cdf_base = _materialize_changes(
             df.sparkSession, root, version, expected_latest
@@ -437,7 +434,7 @@ def write_snapshot(
         except _OutOfOrderCommitRejected:
             # Only the NUMBER was stale (a racer committed above it);
             # the content is still valid — re-allocate and re-write.
-            if attempt == _max_retries - 1:
+            if attempt == CLAIM_ATTEMPTS - 1:
                 raise
         except ConcurrentWriteError:
             if expected_latest is not None or cdf_base is None:
@@ -445,7 +442,7 @@ def write_snapshot(
             # CDF-imposed condition only: the diff base is stale, not
             # the caller's content — clean the claim and recompute the
             # diff against the new latest.
-            if attempt == _max_retries - 1:
+            if attempt == CLAIM_ATTEMPTS - 1:
                 raise
             shutil.rmtree(
                 os.path.join(root, f"v={version}"), ignore_errors=True
@@ -547,7 +544,6 @@ def change_feed_keys(root: str) -> list[str]:
 def append_rows(
     df: DataFrame,
     root: str,
-    _max_retries: int = 16,
     txn_id: str | None = None,
     max_chain_deltas: int | None = None,
 ) -> int:
@@ -696,10 +692,8 @@ def append_rows(
                         "the base's inferred type(s) before appending."
                     )
             partition_by = layout
-    for attempt in range(_max_retries):
-        version = _allocate_and_write(
-            df, root, _max_retries, partition_by=partition_by
-        )
+    for attempt in range(CLAIM_ATTEMPTS):
+        version = _allocate_and_write(df, root, partition_by=partition_by)
         validated = _enforce_constraints(df.sparkSession, root, version)
         try:
             committed = _commit_version(
@@ -715,7 +709,7 @@ def append_rows(
             # A racer committed above this allocation mid-write; a
             # delta's content (its batch) is number-independent, so
             # re-allocate above the racer and re-write.
-            if attempt == _max_retries - 1:
+            if attempt == CLAIM_ATTEMPTS - 1:
                 raise
     else:  # pragma: no cover - loop always breaks or raises
         raise AssertionError("unreachable")
@@ -839,10 +833,6 @@ def _checkpoint_zero_copy(
 
     from pyspark.sql import functions as F
 
-    from openaq_data_pipeline_engineering_spark.operators.metastore import (
-        get_metadata_store,
-    )
-
     if txn_id is not None:
         _, txns = _read_manifest_full(root)
         if txn_id in txns:
@@ -873,15 +863,8 @@ def _checkpoint_zero_copy(
     schemas = [s for s in (_dir_footer_schema(p) for p in paths) if s is not None]
     if schemas and any(not s.equals(schemas[0]) for s in schemas[1:]):
         return None  # evolved chain: one directory can't hold both schemas
-    store = get_metadata_store()
-    for _ in range(16):
-        candidate = (
-            max(_read_manifest(root) + _existing_version_dirs(root), default=0)
-            + 1
-        )
-        if store.claim_version_dir(root, candidate):
-            break
-    else:
+    candidate = _claim_next_version(root)
+    if candidate is None:
         raise RuntimeError(f"could not allocate a version under {root}")
     new_dir = os.path.join(root, f"v={candidate}")
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
@@ -951,10 +934,34 @@ def _checkpoint_zero_copy(
         raise
 
 
+# Claims of a fresh ``v=<N>`` a writer makes before giving up, each at
+# the then-current max + 1; also bounds write_snapshot's and
+# append_rows' re-allocations after a racer commits above them.
+CLAIM_ATTEMPTS = 16
+
+
+def _claim_next_version(root: str) -> int | None:
+    """Claim the next free ``v=<N>`` directory: ``max(manifest, on-disk
+    v=*) + 1``, retried at the new max while concurrent writers win the
+    number. None after :data:`CLAIM_ATTEMPTS` lost claims."""
+    from openaq_data_pipeline_engineering_spark.operators.metastore import (
+        get_metadata_store,
+    )
+
+    store = get_metadata_store()
+    for _ in range(CLAIM_ATTEMPTS):
+        candidate = (
+            max(_read_manifest(root) + _existing_version_dirs(root), default=0)
+            + 1
+        )
+        if store.claim_version_dir(root, candidate):
+            return candidate
+    return None
+
+
 def _allocate_and_write(
     df: DataFrame,
     root: str,
-    max_retries: int = 16,
     partition_by: list[str] | None = None,
 ) -> int:
     """Phase 1 of the commit protocol: claim the next ``v=<N>`` dir and
@@ -968,36 +975,26 @@ def _allocate_and_write(
     committer). Exactly one contender wins each candidate number;
     losers retry at the new max. On an object store the equivalent
     claim is a conditional PUT of a ``v=<N>/_CLAIM`` key."""
-    from openaq_data_pipeline_engineering_spark.operators.metastore import (
-        get_metadata_store,
-    )
-
-    store = get_metadata_store()
     os.makedirs(root, exist_ok=True)
-    for _ in range(max_retries):
-        candidate = (
-            max(_read_manifest(root) + _existing_version_dirs(root), default=0)
-            + 1
+    candidate = _claim_next_version(root)
+    if candidate is None:
+        raise RuntimeError(
+            f"could not allocate a version under {root} after "
+            f"{CLAIM_ATTEMPTS} attempts"
         )
-        if not store.claim_version_dir(root, candidate):
-            continue  # claimed by a concurrent writer
-        # APPEND, not overwrite, into the claimed (empty) dir: Spark's
-        # overwrite DELETES the target directory before writing — i.e.
-        # it deletes the claim itself, and in the delete→write window a
-        # concurrent writer re-claims the same number and both jobs
-        # collide in one _temporary/ (observed under load as a chmod
-        # ENOENT in the output committer). Append never removes the
-        # directory, so the mkdir claim stays exclusive end to end;
-        # the dir is freshly created and empty, so append == write.
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(os.path.join(root, f"v={candidate}"))
-        return candidate
-    raise RuntimeError(
-        f"could not allocate a version under {root} after "
-        f"{max_retries} attempts"
-    )
+    # APPEND, not overwrite, into the claimed (empty) dir: Spark's
+    # overwrite DELETES the target directory before writing — i.e. it
+    # deletes the claim itself, and in the delete→write window a
+    # concurrent writer re-claims the same number and both jobs collide
+    # in one _temporary/ (observed under load as a chmod ENOENT in the
+    # output committer). Append never removes the directory, so the
+    # mkdir claim stays exclusive end to end; the dir is freshly
+    # created and empty, so append == write.
+    w = df.write.mode("append")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(os.path.join(root, f"v={candidate}"))
+    return candidate
 
 
 def _commit_version(

@@ -134,6 +134,37 @@ def test_upsert_spark_job_budget(spark, tmp_path):
     assert 0 < n_jobs <= 10
 
 
+@pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["flat", "partitioned"])
+def test_upsert_replay_runs_no_spark_job(spark, tmp_path, partition_by):
+    """Replaying an already-committed micro-batch returns its version
+    before discovery or the merge runs: no Spark job, no new version."""
+    root = str(tmp_path / "t")
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("v"), F.col("id")).alias("v"),
+        F.lit(1).cast("long").alias("ts"),
+        (F.col("id") % 4).alias("p"),
+    )
+    versioned.write_snapshot(df.repartition(8, "k"), root, partition_by=partition_by)
+    batch = spark.createDataFrame(
+        [(5, "U", 2, 1), (10_000, "N", 2, 0)], "k long, v string, ts long, p long"
+    )
+    upsert_batch(batch, 0, root, ["k"], "ts")
+    versions = versioned.snapshot_versions(root)
+    assert versions == [1, 2]
+    sc = spark.sparkContext
+    group = f"upsert-replay-{os.getpid()}-{tmp_path.name}"
+    sc.setJobGroup(group, "upsert replay")
+    try:
+        upsert_batch(batch, 0, root, ["k"], "ts")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert versioned.snapshot_versions(root) == versions
+    got = _snapshot(spark, root)
+    assert len(got) == 201 and got[5] == "U" and got[10_000] == "N"
+
+
 def test_empty_upsert_batch_commits_its_txn(spark, tmp_path):
     """An upsert always commits, even a micro-batch with no rows: its
     txn entry is what turns a replay of that batch into a no-op. A

@@ -49,3 +49,20 @@ def test_survey_2_12_marks_oracle_coverage():
     for name, mark in rows:
         has_oracle = registry.QUERIES[name].oracle is not None
         assert (mark == "yes") == has_oracle, (name, mark)
+
+
+def test_every_declared_query_still_registered():
+    from openaq_data_pipeline_engineering_spark.plans import registry
+
+    names = list(registry.get_queries())
+    assert len(names) == len(set(names)) == len(registry.QUERIES)
+
+
+def test_queries_keep_registration_order():
+    # get_queries() returns the registry as registered: no file at the
+    # repo root or anywhere else reorders it.
+    from openaq_data_pipeline_engineering_spark.plans import registry
+
+    queries, oracles = registry.get_queries(), registry.get_oracles()
+    assert list(queries) == list(registry.QUERIES)
+    assert set(oracles) <= set(queries)
