@@ -52,17 +52,12 @@ def test_survey_2_12_marks_oracle_coverage():
 
 
 def test_every_declared_query_still_registered():
-    from openaq_data_pipeline_engineering_spark.plans import registry
-
-    names = list(registry.get_queries())
-    assert len(names) == len(set(names)) == len(registry.QUERIES)
-
-
-def test_queries_keep_registration_order():
-    # get_queries() returns the registry as registered: no file at the
-    # repo root or anywhere else reorders it.
+    # get_queries() returns the registry in registration order: no file
+    # at the repo root or anywhere else reorders it.
     from openaq_data_pipeline_engineering_spark.plans import registry
 
     queries, oracles = registry.get_queries(), registry.get_oracles()
-    assert list(queries) == list(registry.QUERIES)
+    names = list(queries)
+    assert len(names) == len(set(names)) == len(registry.QUERIES)
+    assert names == list(registry.QUERIES)
     assert set(oracles) <= set(queries)
