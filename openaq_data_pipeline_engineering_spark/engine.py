@@ -6,7 +6,8 @@ a single SparkSession is both the transform engine and the SQL surface:
 ``Engine.sql()`` replaces the whole Athena submit/poll/fetch scaffold
 (reference utils/athena_utils.py:68-145) with a synchronous Catalyst query.
 
-Scale posture (100 TB / 1000-executor design, tested on local[32]):
+Scale posture (100 TB / 1000-executor design; tested in local mode, with
+shuffle partitions sized to the local cores):
 - AQE on: runtime shuffle-partition coalescing, skew-join splitting.
 - Session timezone pinned UTC: partition columns derived from timestamps
   must not shift with cluster-local timezones (reference
@@ -69,10 +70,11 @@ def _size_to_bytes(raw: str) -> int | None:
     return int(m.group(1)) * mult if mult else None
 
 # Local-mode-only shuffle sizing: the 200 default wastes task-launch
-# overhead at test scale (AQE coalesces further). Applied ONLY when the
-# session master is local AND the conf still holds Spark's own default —
-# a cluster session's (or caller's) explicit setting is never overridden.
-_LOCAL_SHUFFLE_PARTITIONS = "32"
+# overhead on one machine (AQE coalesces further), so it is resized to
+# the session's own defaultParallelism — one partition per core.
+# Applied ONLY when the session master is local AND the conf still holds
+# Spark's own default — a cluster session's (or caller's) explicit
+# setting is never overridden.
 _SHUFFLE_PARTITIONS_DEFAULT = "200"
 
 # Builder-time confs for sessions we create ourselves.
@@ -111,17 +113,15 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
             )
     except Exception:
         pass
-    try:
-        master = spark.conf.get("spark.master", "")
-        current = spark.conf.get(
-            "spark.sql.shuffle.partitions", _SHUFFLE_PARTITIONS_DEFAULT
+    master = spark.conf.get("spark.master", "")
+    current = spark.conf.get(
+        "spark.sql.shuffle.partitions", _SHUFFLE_PARTITIONS_DEFAULT
+    )
+    if master.startswith("local") and current == _SHUFFLE_PARTITIONS_DEFAULT:
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
         )
-        if master.startswith("local") and current == _SHUFFLE_PARTITIONS_DEFAULT:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", _LOCAL_SHUFFLE_PARTITIONS
-            )
-    except Exception:
-        pass
     return spark
 
 

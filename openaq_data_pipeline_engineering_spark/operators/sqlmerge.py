@@ -836,8 +836,21 @@ def execute_merge_statement(
 
     st = parse_merge(rewritten)
     lowered: list[DataFrame] = []
+    # set by discover, consumed by the lower call that follows it
+    nothing_touched = False
 
     def lower(target):
+        nonlocal nothing_touched
+        empty_subset, nothing_touched = nothing_touched, False
+        if empty_subset and not st.not_matched:
+            # No file touched and no insert clause: the merge over the
+            # empty subset is empty by construction. Plan it (the
+            # statement is still validated and typed) without the
+            # strict check's cache and count; limit(0) lets the commit
+            # loop's emptiness probe finish without a Spark job.
+            return execute_merge(
+                spark, rewritten, target_df=target, strict=False
+            ).limit(0)
         df = execute_merge(
             spark, rewritten, target_df=target, evolve_schema=evolve_schema
         )
@@ -853,6 +866,7 @@ def execute_merge_statement(
         )
 
         def discover(vdir):
+            nonlocal nothing_touched
             # None = ON condition or source plan unsafe to evaluate
             # twice (non-deterministic subquery, ADVICE r10 #1), or a
             # by-source condition the target alone cannot resolve
@@ -870,6 +884,7 @@ def execute_merge_statement(
                     if extra is not None
                     else None
                 )
+            nothing_touched = touched == []
             return touched
 
         # Conflict-resolution probe (r12): a lost CAS race may logically

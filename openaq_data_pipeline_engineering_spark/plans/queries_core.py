@@ -560,11 +560,12 @@ def semi_join_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# F11 — AQI piecewise-linear scoring, native expressions (AQI plan:36-49)
+# F11 — AQI piecewise-linear scoring, native SQL expressions (AQI plan:36-49)
 # --------------------------------------------------------------------------
 def _aqi_case_sql(col: str, pollutant: str) -> str:
     """Emit the DuckDB CASE expression for one pollutant's breakpoints —
-    generated from the SAME table the Spark expression uses.
+    generated from the SAME table the Spark expression uses, but by its
+    own formula text, so the differential checks an independent build.
 
     Every literal is cast to DOUBLE: DuckDB otherwise parses `12.1` as
     DECIMAL(3,1) and does exact decimal subtraction where Spark does
@@ -614,21 +615,21 @@ _AQI_ORACLE = f"""
 
 @query(
     "aqi_piecewise",
-    "F11: EPA piecewise-linear AQI + level bucketing as native Column expressions",
+    "F11: EPA piecewise-linear AQI + level bucketing as native SQL expressions",
     oracle=_AQI_ORACLE,
 )
 def aqi_piecewise(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    pm25 = piecewise_linear(F.col("value"), BREAKPOINTS["pm25"])
-    pm10 = piecewise_linear(F.col("value") * 0.8, BREAKPOINTS["pm10"])
-    df = ev.select(
-        "event_id", pm25.alias("aqi_pm25"), pm10.alias("aqi_pm10")
+    pm25 = piecewise_linear("value", BREAKPOINTS["pm25"])
+    pm10 = piecewise_linear("(value * 0.8)", BREAKPOINTS["pm10"])
+    df = ev.selectExpr(
+        "event_id", f"{pm25} AS aqi_pm25", f"{pm10} AS aqi_pm10"
     )
-    aqi = F.greatest("aqi_pm25", "aqi_pm10")
-    return df.select(
+    aqi = "greatest(aqi_pm25, aqi_pm10)"
+    return df.selectExpr(
         "event_id", "aqi_pm25", "aqi_pm10",
-        aqi.alias("aqi"),
-        aqi_level(aqi).alias("aqi_level"),
+        f"{aqi} AS aqi",
+        f"{aqi_level(aqi)} AS aqi_level",
     )
 
 

@@ -135,6 +135,49 @@ def test_upsert_spark_job_budget(spark, tmp_path):
 
 
 @pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["flat", "partitioned"])
+def test_zero_match_merge_runs_only_discovery(spark, tmp_path, partition_by):
+    """A MERGE whose ON condition matches no target row and which has no
+    insert clause is a no-op: it commits nothing and runs only its
+    discovery. That is the zero-match UPDATE's one scan job plus the job
+    that broadcasts the source for the ON semi-join; the merge lowering,
+    its ambiguity check and the emptiness probe run none."""
+    root = str(tmp_path / "t")
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("v"), F.col("id")).alias("v"),
+        F.lit(1).cast("long").alias("ts"),
+        (F.col("id") % 4).alias("p"),
+    )
+    versioned.write_snapshot(df.repartition(8, "k"), root, partition_by=partition_by)
+    spark.sql(
+        "SELECT * FROM VALUES (99999L, 'x') AS src(k, v)"
+    ).createOrReplaceTempView("src")
+    update = f"UPDATE '{root}' SET v = 'x' WHERE k > 5000"
+    merge = (
+        f"MERGE INTO '{root}' t USING src s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v"
+    )
+    execute_update_statement(spark, update)  # warm: first read of the base
+    versions = versioned.snapshot_versions(root)
+    sc = spark.sparkContext
+
+    def jobs(name, run):
+        group = f"zero-match-{name}-{os.getpid()}-{tmp_path.name}"
+        sc.setJobGroup(group, name)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    n_update = jobs("update", lambda: execute_update_statement(spark, update))
+    n_merge = jobs("merge", lambda: execute_merge_statement(spark, merge))
+    assert 0 < n_merge <= n_update + 1
+    assert versioned.snapshot_versions(root) == versions
+    assert len(_snapshot(spark, root)) == 200
+
+
+@pytest.mark.parametrize("partition_by", [None, ["p"]], ids=["flat", "partitioned"])
 def test_upsert_replay_runs_no_spark_job(spark, tmp_path, partition_by):
     """Replaying an already-committed micro-batch returns its version
     before discovery or the merge runs: no Spark job, no new version."""

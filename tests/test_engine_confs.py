@@ -2,15 +2,15 @@
 
 `apply_runtime_confs` runs on every `load_table` against WHOEVER owns the
 session — including an external cluster session. It must never override an
-explicit shuffle-partition choice (a 32-task cap on a 1000-executor
-cluster would serialize every exchange); it only right-sizes the untouched
-Spark default, and only in local mode.
+explicit shuffle-partition choice (a small local task count on a
+1000-executor cluster would serialize every exchange); it only resizes the
+untouched Spark default to the session's own core count, and only in local
+mode.
 """
 
 from __future__ import annotations
 
 from openaq_data_pipeline_engineering_spark.engine import (
-    _LOCAL_SHUFFLE_PARTITIONS,
     _SHUFFLE_PARTITIONS_DEFAULT,
     apply_runtime_confs,
 )
@@ -34,7 +34,7 @@ def test_default_shuffle_partitions_resized_in_local_mode(spark):
     try:
         spark.conf.set(_KEY, _SHUFFLE_PARTITIONS_DEFAULT)
         apply_runtime_confs(spark)
-        assert spark.conf.get(_KEY) == _LOCAL_SHUFFLE_PARTITIONS
+        assert spark.conf.get(_KEY) == str(spark.sparkContext.defaultParallelism)
     finally:
         spark.conf.set(_KEY, original)
 

@@ -203,6 +203,117 @@ class TestAqi:
         row = compute_aqi(df).first()
         assert row.dominant_pollutant == "pm10"
 
+    @staticmethod
+    def _epa(conc: dict) -> tuple:
+        """The EPA formula in plain Python from the same BREAKPOINTS and
+        AQI_LEVELS: (aqi rounded to 4 places as Spark's round() does,
+        level, dominant pollutant)."""
+        from decimal import ROUND_HALF_UP, Decimal
+
+        from openaq_data_pipeline_engineering_spark.operators.aqi import (
+            AQI_LEVELS,
+            BREAKPOINTS,
+        )
+
+        def sub(c, bps):
+            if c is None or c < 0:
+                return None
+            for c_lo, c_hi, i_lo, i_hi in bps:
+                if c_lo <= c <= c_hi:
+                    break
+            else:
+                c_lo, c_hi, i_lo, i_hi = bps[-1]
+                if c <= c_hi:
+                    return None  # between two segments
+            return (float(i_hi) - i_lo) / (c_hi - c_lo) * (c - c_lo) + i_lo
+
+        subs = {n: sub(c, BREAKPOINTS[n]) for n, c in conc.items()}
+        known = {n: v for n, v in subs.items() if v is not None}
+        if not known:
+            return None, "Unknown", "Unknown"
+        top = max(known.values())
+        aqi = float(
+            Decimal(repr(top)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
+        )
+        level = next(
+            (lab for lo, hi, lab in AQI_LEVELS if lo <= aqi <= hi), "Unknown"
+        )
+        return aqi, level, min(n for n, v in known.items() if v == top)
+
+    def test_matches_python_epa_formula(self, spark):
+        """compute_aqi equals the plain-Python formula exactly on every
+        breakpoint edge, the gaps between segments, negatives, nulls,
+        values above the top segment and sub-index ties; on a
+        single-pollutant frame, a custom column mapping, and a frame
+        that already holds an ``aqi`` column (replaced in place)."""
+        from openaq_data_pipeline_engineering_spark.operators.aqi import (
+            BREAKPOINTS,
+        )
+
+        edges = sorted(
+            {x for bps in BREAKPOINTS.values() for seg in bps for x in seg[:2]}
+        )
+        singles = edges + [
+            12.05, 35.45, 54.5, 154.5, 424.5,  # gaps: NULL sub-index
+            -0.1, -5.0, None, 600.0, 1000.0, 1e6, 3.3, 77.7,
+        ]
+        pairs = [(c, None) for c in singles] + [(None, c) for c in singles]
+        pairs += [
+            (12.1, 55.0), (35.5, 155.0), (0.0, 0.0), (12.0, 54.0),  # ties
+            (12.05, 54.5), (-1.0, 20.0), (20.0, -1.0), (40.0, 160.0),
+        ]
+        rows = [(i, a, b) for i, (a, b) in enumerate(pairs)]
+
+        def check(out, conc_of):
+            got = {r.id: (r.aqi, r.aqi_level, r.dominant_pollutant) for r in out.collect()}
+            assert len(got) == len(rows)
+            for i, a, b in rows:
+                assert got[i] == self._epa(conc_of(a, b)), (a, b)
+
+        df = spark.createDataFrame(rows, "id int, pm25 double, pm10 double")
+        out = compute_aqi(df)
+        assert out.columns == ["id", "pm25", "pm10", "aqi", "aqi_level", "dominant_pollutant"]
+        check(out, lambda a, b: {"pm25": a, "pm10": b})
+
+        single = compute_aqi(df.select("id", "pm25"))
+        assert single.columns == ["id", "pm25", "aqi", "aqi_level", "dominant_pollutant"]
+        check(single, lambda a, b: {"pm25": a})
+
+        mapped = compute_aqi(
+            df.withColumnRenamed("pm25", "fine").withColumnRenamed("pm10", "coarse"),
+            {"pm25": "fine", "pm10": "coarse"},
+        )
+        check(mapped, lambda a, b: {"pm25": a, "pm10": b})
+
+        held = compute_aqi(df.select("id", F.lit("old").alias("aqi"), "pm25", "pm10"))
+        assert held.columns == ["id", "aqi", "pm25", "pm10", "aqi_level", "dominant_pollutant"]
+        check(held, lambda a, b: {"pm25": a, "pm10": b})
+
+    def test_build_makes_few_jvm_calls(self, spark):
+        """Building the AQI DataFrame (no action) stays a handful of
+        Py4J round trips. Composing the breakpoint chains from Column
+        calls took ~2.3k, a few hundred milliseconds per query."""
+        import gc
+
+        df = spark.createDataFrame([(1, 10.0, 20.0)], "id int, pm25 double, pm10 double")
+        compute_aqi(df)  # first use imports and caches outside the count
+        client = spark.sparkContext._gateway._gateway_client
+        real = client.send_command
+        calls = []
+
+        def counting(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        gc.disable()  # no Py4J object deletes mid-count
+        client.send_command = counting
+        try:
+            compute_aqi(df)
+        finally:
+            del client.send_command
+            gc.enable()
+        assert 0 < len(calls) <= 100
+
 
 class TestObserve:
     def test_observe_counts_single_pass(self, spark):
