@@ -97,6 +97,12 @@ from pyspark.sql import functions as F
 from openaq_data_pipeline_engineering_spark.operators.compact import (
     iter_data_parquet_files,
 )
+from openaq_data_pipeline_engineering_spark.operators.versioned import (
+    _read_manifest_doc,
+    _version_dir,
+    partition_layout,  # noqa: F401 - the walk, importable from here too
+    version_layout,
+)
 
 # Diagnostics only: last commit's rewrite stats per root (abspath ->
 # {"files_rewritten", "files_carried", "bytes_rewritten",
@@ -123,35 +129,6 @@ def local_path(uri: str) -> str:
     return uri
 
 
-def recorded_layout(root: str, base: int) -> list[str] | None:
-    """The partition layout the commit manifest RECORDED for ``base``
-    (VERDICT r11 #2: the layout is immutable per version, so one
-    manifest read replaces the per-statement recursive walk of every
-    data file — at 100k files on an object store that walk is a full
-    LIST per DML). None when the version predates layout recording;
-    callers fall back to :func:`partition_layout`'s exact walk."""
-    from openaq_data_pipeline_engineering_spark.operators.versioned import (
-        _read_manifest_doc,
-    )
-
-    return _read_manifest_doc(root)["layouts"].get(base)
-
-
-def resolve_base_dir(root: str, base: int) -> str:
-    """The data directory holding ``base``'s files — the local
-    ``<root>/v=N`` or, for a shallow clone, the source directory the
-    clone's ``base_root`` chain resolves to. COW against a
-    clone-referenced base carries those files by FILESET REFERENCE
-    (r12): the sidecar entry's owner resolves through the same chain
-    at read time, so a clone's first DML is zero-copy on every store
-    (pre-r12 it hardlink-materialized the whole base first)."""
-    from openaq_data_pipeline_engineering_spark.operators.versioned import (
-        _version_dir,
-    )
-
-    return _version_dir(root, base)
-
-
 def cow_eligible_base(root: str, base: int) -> bool:
     """True when ``base`` is a full snapshot directory (local, or
     clone-referenced through the ``base_root`` chain — r12: the fileset
@@ -159,42 +136,37 @@ def cow_eligible_base(root: str, base: int) -> bool:
     Hive-partitioned with one partition column sequence (VERDICT r10
     #1) — i.e. a layout the relative-path carry reproduces losslessly.
     Delta chains, restores, and mixed flat/partitioned directories
-    fall back. Uses the manifest-recorded layout when present (one
-    read, no file walk); only unrecorded (pre-r12) versions pay the
-    verification walk."""
-    from openaq_data_pipeline_engineering_spark.operators.versioned import (
-        _read_manifest_doc,
-    )
-
+    fall back. The layout is :func:`versioned.version_layout`'s (the
+    manifest record; only unrecorded versions pay the walk)."""
     doc = _read_manifest_doc(root)
     if base not in doc["versions"]:
         return False
     if doc["modes"].get(base, "full") != "full":
         return False
     try:
-        vdir = resolve_base_dir(root, base)
+        vdir = _version_dir(root, base)
     except FileNotFoundError:
         return False  # referenced source version vacuumed away
-    recorded = doc["layouts"].get(base)
-    if recorded is not None:
-        # verify-on-mismatch, cheaply: ONE top-level scandir (no file
-        # walk) catches the only out-of-band mutation a recorded
-        # layout could mask — data files spliced flat next to
-        # partition directories (or vice versa). Deeper consistency is
-        # the immutable-version contract's job.
-        try:
-            with os.scandir(vdir) as it:
-                for e in it:
-                    if e.name.startswith(("_", ".")):
-                        continue
-                    if recorded and e.is_file():
-                        return False  # flat data beside key=value dirs
-                    if not recorded and e.is_dir() and "=" in e.name:
-                        return False  # partition dirs on a flat record
-        except OSError:
-            return False
-        return True
-    return partition_layout(vdir) is not None
+    layout = version_layout(root, base, doc)
+    if layout is None:
+        return False
+    # verify-on-mismatch, cheaply: ONE top-level scandir (no file
+    # walk) catches the only out-of-band mutation a recorded layout
+    # could mask — data files spliced flat next to partition
+    # directories (or vice versa). Deeper consistency is the
+    # immutable-version contract's job.
+    try:
+        with os.scandir(vdir) as it:
+            for e in it:
+                if e.name.startswith(("_", ".")):
+                    continue
+                if layout and e.is_file():
+                    return False  # flat data beside key=value dirs
+                if not layout and e.is_dir() and "=" in e.name:
+                    return False  # partition dirs on a flat layout
+    except OSError:
+        return False
+    return True
 
 
 def ensure_cow_base(spark: SparkSession, root: str) -> int | None:
@@ -222,7 +194,6 @@ def ensure_cow_base(spark: SparkSession, root: str) -> int | None:
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         ConcurrentWriteError,
         _checkpoint_zero_copy,
-        _read_manifest_doc,
         snapshot_versions,
     )
 
@@ -382,38 +353,6 @@ def touched_files_by_keys(
     return sorted(local_path(r["__cow_file"]) for r in rows)
 
 
-def partition_layout(vdir: str) -> list[str] | None:
-    """The Hive partition-column sequence shared by EVERY data file of
-    ``vdir`` (``[]`` = flat), or None when the layout is inconsistent —
-    a mix of flat and partitioned files, differing column sequences, or
-    data under non-``key=value`` subdirectories. A non-None layout is
-    exactly what the relative-path carry + ``partitionBy`` rewrite can
-    reproduce losslessly; None means full-rewrite fallback. A FILESET
-    version's layout is judged over its entries' rel-within-owner
-    paths (its local directory holds only the files it wrote)."""
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        version_files_with_rels,
-    )
-
-    layout: list[str] | None = None
-    for _p, rel in version_files_with_rels(vdir):
-        segs = (
-            []
-            if os.sep not in rel
-            else rel.split(os.sep)[:-1]
-        )
-        cols: list[str] = []
-        for s in segs:
-            if "=" not in s:
-                return None  # data under a non-Hive subdirectory
-            cols.append(s.split("=", 1)[0])
-        if layout is None:
-            layout = cols
-        elif layout != cols:
-            return None
-    return layout if layout is not None else []
-
-
 def _part_value_key(raw: str) -> object:
     """Inference-equivalent key of a Hive partition directory
     segment's raw value text: ``month=01`` and ``month=1`` must map to
@@ -564,7 +503,7 @@ def _try_conflict_merge(
     the new head without re-running the statement. Mergeable iff:
 
     1. the head is a SELF-CONTAINED full version (not a delta chain /
-       restore span) with the same recorded partition layout;
+       restore span) with the same partition layout;
     2. no intervening commit rewrote or removed any file this
        statement touched — every touched ``(owner, rel)`` identity is
        still live at the head (file identities are immutable: a COW
@@ -588,9 +527,6 @@ def _try_conflict_merge(
         read_version_subset,
         version_entry_map,
     )
-    from openaq_data_pipeline_engineering_spark.operators.versioned import (
-        _read_manifest_doc,
-    )
 
     doc = _read_manifest_doc(root)
     versions = doc.get("versions") or []
@@ -602,9 +538,9 @@ def _try_conflict_merge(
         return None
     if doc.get("modes", {}).get(head, "full") != "full":
         return None  # delta/restore head: content spans a chain
-    if recorded_layout(root, head) != list(effective_layout):
-        return None  # layout changed, or a pre-r12 head without one
-    head_vdir = resolve_base_dir(root, head)
+    if version_layout(root, head, doc) != list(effective_layout):
+        return None  # the head changed the layout
+    head_vdir = _version_dir(root, head)
     try:
         head_map = version_entry_map(head_vdir, head)
     except (OSError, ValueError):
@@ -702,13 +638,10 @@ def commit_file_rewrite(
         _claim_next_version,
         _commit_version,
         _enforce_constraints,
-        _read_manifest_doc,
     )
 
-    vdir_base = resolve_base_dir(root, base)
-    layout = recorded_layout(root, base)
-    if layout is None:  # pre-r12 version: pay the verification walk
-        layout = partition_layout(vdir_base)
+    vdir_base = _version_dir(root, base)
+    layout = version_layout(root, base)
     if layout is None:
         raise ValueError(
             f"v={base} of {root!r} has an inconsistent (mixed flat/"
@@ -1077,7 +1010,7 @@ def commit_rewrite(
             )
             if cow_base is not None:
                 base = cow_base
-                vdir = resolve_base_dir(root, base)
+                vdir = _version_dir(root, base)
                 touched = discover(vdir)
                 if touched is not None:
                     # schema-pinned basePath read: partitioned bases

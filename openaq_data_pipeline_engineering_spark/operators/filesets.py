@@ -129,13 +129,6 @@ def is_fileset_dir(vdir: str) -> bool:
     return os.path.isfile(os.path.join(vdir, FILESET_SIDECAR))
 
 
-def fileset_layout(vdir: str) -> list[str] | None:
-    """The recorded layout of a fileset version dir, or None for a
-    plain directory."""
-    fs = read_fileset(vdir)
-    return list(fs["layout"]) if fs is not None else None
-
-
 def _owner_dir(vdir: str, owner: int) -> str:
     """Physical directory of ``owner``'s files, resolved against the
     root that owns ``vdir`` (clone base_root chains included)."""

@@ -155,24 +155,6 @@ def execute_describe_history(spark: SparkSession, sql: str) -> DataFrame:
     )
 
 
-def _detect_partition_cols(path: str) -> list[str]:
-    """Partition columns from the Hive directory layout (ordered by
-    directory depth), [] for an unpartitioned table."""
-    import os
-
-    for root, dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            rel = os.path.relpath(root, path)
-            if rel == ".":
-                return []
-            return [
-                seg.split("=", 1)[0]
-                for seg in rel.split(os.sep)
-                if "=" in seg
-            ]
-    return []
-
-
 def execute_optimize(spark: SparkSession, sql: str) -> DataFrame:
     """Lower an OPTIMIZE statement; returns one metrics row
     (n_files_before, n_files_after, n_rows)."""
@@ -240,6 +222,17 @@ def execute_optimize(spark: SparkSession, sql: str) -> DataFrame:
         )
     _recover_interrupted_partition_rewrite(path)  # before any read
     before = file_stats(path)["n_files"]
+    from openaq_data_pipeline_engineering_spark.operators.versioned import (
+        partition_layout,
+    )
+
+    pcols = partition_layout(path)
+    if pcols is None:
+        raise UtilStatementError(
+            f"{path!r} mixes partition layouts (flat files beside "
+            "key=value directories, or differing partition columns); "
+            "OPTIMIZE rewrites one consistent layout"
+        )
     if m.group("cols"):
         cols = [c.strip() for c in m.group("cols").split(",")]
         if not 1 <= len(cols) <= 6:
@@ -248,7 +241,6 @@ def execute_optimize(spark: SparkSession, sql: str) -> DataFrame:
                 "drops as 63 // n_cols bits per column); got "
                 + repr(cols)
             )
-        pcols = _detect_partition_cols(path)
         if pcols:
             overlap = [c for c in cols if c in pcols]
             if overlap:
@@ -270,10 +262,7 @@ def execute_optimize(spark: SparkSession, sql: str) -> DataFrame:
             _zorder_rewrite(spark, path, cols)
     else:
         compact_partitions(
-            spark,
-            path,
-            _detect_partition_cols(path),
-            partition_filter=m.group("where"),
+            spark, path, pcols, partition_filter=m.group("where")
         )
     after = file_stats(path)
     return local_rows(spark, 
@@ -430,6 +419,7 @@ def _optimize_versioned(
     )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         ConcurrentWriteError,
+        chain_layout,
         read_snapshot,
         resolve_version_paths,
         snapshot_versions,
@@ -472,20 +462,7 @@ def _optimize_versioned(
         # partition columns into data columns. Mixed/flat chains keep
         # the flat rewrite (flattening a mixed chain is the documented
         # content-preserving repair).
-        from openaq_data_pipeline_engineering_spark.operators.cow import (
-            partition_layout,
-        )
-
-        layouts = {
-            tuple(lo)
-            for lo in (partition_layout(p) for p in paths)
-            if lo is not None
-        }
-        part_by = (
-            list(layouts.pop())
-            if len(layouts) == 1 and layouts != {()}
-            else None
-        )
+        part_by = chain_layout(root, base) or None
         if cols:
             zcols = [F.col(c) for c in (part_by or [])] + [_zorder_key(cols)]
             df = df.repartitionByRange(n_files, *zcols)
@@ -551,11 +528,6 @@ def _optimize_incremental(
         COMMIT_ATTEMPTS,
         commit_file_rewrite,
         ensure_cow_base,
-        recorded_layout,
-        resolve_base_dir,
-    )
-    from openaq_data_pipeline_engineering_spark.operators.cow import (
-        partition_layout as _playout,
     )
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         read_version_dir,
@@ -564,6 +536,8 @@ def _optimize_incremental(
     )
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         ConcurrentWriteError,
+        _version_dir,
+        version_layout,
     )
 
     last_err = None
@@ -575,10 +549,8 @@ def _optimize_incremental(
                 "(consistent flat or one-layout partitioned latest "
                 "version); run the full OPTIMIZE to normalize first"
             )
-        vdir = resolve_base_dir(root, base)
-        layout = recorded_layout(root, base)
-        if layout is None:
-            layout = _playout(vdir)
+        vdir = _version_dir(root, base)
+        layout = version_layout(root, base)
         pairs = version_files_with_rels(vdir)
         n_before = len(pairs)
         # group small files by their partition directory: packing is
@@ -761,7 +733,7 @@ def execute_restore(spark: SparkSession, sql: str) -> DataFrame:
     O(manifest + file count) even on a 100 TB table."""
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         _read_manifest_doc,
-        _resolve_version_paths,
+        _resolve_version_pairs,
         restore_snapshot,
     )
 
@@ -779,7 +751,9 @@ def execute_restore(spark: SparkSession, sql: str) -> DataFrame:
     # accessor would let a concurrent commit slip between them.
     doc = _read_manifest_doc(root)
     target = int(doc["modes"][new_v].split(":", 1)[1])
-    n_rows = _footer_rows_dirs(_resolve_version_paths(root, doc, new_v))
+    n_rows = _footer_rows_dirs(
+        [p for _v, p in _resolve_version_pairs(root, doc, new_v)]
+    )
     return local_rows(spark, 
         [(int(target), int(new_v), int(n_rows))],
         "restored_to_version int, new_version int, n_rows bigint",
@@ -830,6 +804,7 @@ def execute_insert(spark: SparkSession, sql: str) -> DataFrame:
     CHECK constraints are enforced by the underlying commit."""
     from openaq_data_pipeline_engineering_spark.operators.versioned import (
         append_rows,
+        chain_layout,
         read_snapshot,
         snapshot_versions,
         write_snapshot,
@@ -843,13 +818,13 @@ def execute_insert(spark: SparkSession, sql: str) -> DataFrame:
         )
     root, mode = m.group("path"), m.group("mode").upper()
     df = spark.sql(m.group("body"))
-    has_versions = bool(snapshot_versions(root))
-    if not has_versions and mode == "INTO":
+    versions = snapshot_versions(root)
+    if not versions and mode == "INTO":
         raise UtilStatementError(
             f"{root!r} has no committed versions; INSERT OVERWRITE "
             "creates the table"
         )
-    if has_versions:
+    if versions:
         target = read_snapshot(spark, root).schema
         if len(df.columns) != len(target):
             raise UtilStatementError(
@@ -876,27 +851,9 @@ def execute_insert(spark: SparkSession, sql: str) -> DataFrame:
         # INSERT OVERWRITE preserves an existing one-layout partitioned
         # target (Delta keeps table partitioning on overwrite); a fresh
         # root or flat/mixed target writes flat as before
-        part_by = None
-        if has_versions:
-            from openaq_data_pipeline_engineering_spark.operators.cow import (
-                partition_layout,
-            )
-            from openaq_data_pipeline_engineering_spark.operators.versioned import (
-                resolve_version_paths,
-            )
-
-            layouts = {
-                tuple(lo)
-                for lo in (
-                    partition_layout(p)
-                    for p in resolve_version_paths(root)
-                )
-                if lo is not None
-            }
-            if len(layouts) == 1 and layouts != {()}:
-                cand = list(layouts.pop())
-                if all(c in df.columns for c in cand):
-                    part_by = cand
+        part_by = chain_layout(root, versions[-1]) if versions else None
+        if not part_by or any(c not in df.columns for c in part_by):
+            part_by = None
         version = write_snapshot(df, root, partition_by=part_by)
         vmode = "full"
     n_rows = _footer_row_count(os.path.join(root, f"v={version}"))

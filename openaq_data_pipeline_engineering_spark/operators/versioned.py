@@ -74,7 +74,8 @@ def _dump_manifest(
     # ([] = flat) — immutable per version, so eligibility checks read
     # it here instead of re-walking every data file per DML statement
     # (a full recursive LIST on an object store). Absent for versions
-    # committed by older writers (callers fall back to the walk).
+    # committed by older writers (version_layout / chain_layout walk
+    # those instead).
     if layouts:
         doc["layouts"] = {str(v): list(lo) for v, lo in layouts.items()}
     # Version dirs RETAINED past their manifest lifetime because a
@@ -276,52 +277,6 @@ class PartitionedAppendError(ValueError):
     base's layout and the chain read unions per-directory."""
 
 
-def _has_partition_subdirs(d: str) -> bool:
-    """True when ``d`` holds Hive ``key=value`` partition
-    subdirectories — one O(top-level entries) scandir, no file walk
-    (the append hot path must stay O(batch))."""
-    try:
-        with os.scandir(d) as it:
-            return any(
-                e.is_dir() and "=" in e.name and not e.name.startswith(("_", "."))
-                for e in it
-            )
-    except FileNotFoundError:
-        return False
-
-
-def _dir_layout_cheap(d: str) -> list[str] | None:
-    """Partition-column sequence of ``d`` from ONE data file's relative
-    path ([] = flat) — O(top-level scandir + one walk step), the
-    append-hot-path twin of :func:`cow.partition_layout` (which
-    verifies EVERY file; consistency of our own written dirs is
-    guaranteed by partitionBy, and an inconsistent adopted dir fails
-    loudly at read time regardless). None when ``d`` has no data
-    files."""
-    from openaq_data_pipeline_engineering_spark.operators.compact import (
-        iter_data_parquet_files,
-    )
-    from openaq_data_pipeline_engineering_spark.operators.filesets import (
-        fileset_layout,
-    )
-
-    recorded = fileset_layout(d)
-    if recorded is not None:
-        # fileset version: the sidecar records the layout of its
-        # ENTRIES (the local directory holds only the files this
-        # version wrote — possibly none)
-        return list(recorded)
-    if not _has_partition_subdirs(d):
-        for _ in iter_data_parquet_files(d):
-            return []
-        return None
-    for p in iter_data_parquet_files(d):
-        rel = os.path.relpath(os.path.dirname(p), d)
-        segs = [] if rel == "." else rel.split(os.sep)
-        return [s.split("=", 1)[0] for s in segs if "=" in s]
-    return None
-
-
 def write_snapshot(
     df: DataFrame,
     root: str,
@@ -336,7 +291,8 @@ def write_snapshot(
     the partitioned layout ``versionize_table`` adopts from existing
     tables. Partitioned versions are first-class everywhere:
     file-granular DML rewrites only touched partition files (the
-    operators/cow.py carry links untouched files at their subpaths),
+    operators/cow.py carry references untouched files by fileset
+    entry at their subpaths),
     appends auto-match the layout, and the zero-copy rebase merges at
     relative subpaths. Reads return the partition columns with Spark's
     ordinary partition-value inference — exactly what a plain read of
@@ -598,27 +554,21 @@ def append_rows(
     # base's layout (read_snapshot unions partitioned chains
     # per-directory); when it can't — columns missing, or the chain
     # already mixes layouts — the append is rejected loudly instead of
-    # poisoning the table. One scandir + one walk step per chain
-    # directory (chains are bounded by the rebase policy).
+    # poisoning the table. The layout is the manifest's record
+    # (chain_layout); only unrecorded directories are walked.
     doc = _read_manifest_doc(root)
     partition_by: list[str] | None = None
     if doc["versions"]:
         latest = doc["versions"][-1]
-        chain_paths = _resolve_version_paths(root, doc, latest)
-        layouts = {
-            tuple(lo)
-            for lo in (_dir_layout_cheap(p) for p in chain_paths)
-            if lo is not None
-        }
-        if len(layouts) > 1:
+        layout = chain_layout(root, latest, doc)
+        if layout is None:
             raise PartitionedAppendError(
                 f"cannot append to {root!r}: its latest version "
                 f"(v={latest}) reads through MIXED directory layouts "
-                f"({sorted(layouts)}) — re-base to one layout first "
+                "— re-base to one layout first "
                 "(checkpoint_appends(compact=True) rewrites partition "
                 "columns into data columns)."
             )
-        layout = list(layouts.pop()) if layouts else []
         if layout:
             missing = [c for c in layout if c not in df.columns]
             if missing:
@@ -642,26 +592,33 @@ def append_rows(
             # partition column to string ('01' stops comparing equal to
             # 1) — a data-dependent schema flip Delta rejects at write
             # time. Compare the batch's types against the base chain's
-            # INFERRED types (one lazy schema probe of the newest
-            # partitioned chain directory — metadata-only, no job) and
+            # INFERRED types (one lazy schema probe of the newest chain
+            # directory holding data — metadata-only, no job) and
             # reject mismatches loudly. Integral widths (int vs bigint)
             # are interchangeable: their canonical spellings are
             # identical, so inference re-converges.
             from openaq_data_pipeline_engineering_spark.operators.filesets import (
                 read_version_dir,
+                version_data_files,
             )
 
-            base_types = None
-            for p in reversed(chain_paths):
-                if _dir_layout_cheap(p) == layout:
-                    base_types = {
-                        f.name: f.dataType
-                        for f in read_version_dir(
-                            df.sparkSession, p
-                        ).schema.fields
-                    }
-                    break
-            if base_types is not None:
+            newest = next(
+                (
+                    p
+                    for _v, p in reversed(
+                        _resolve_version_pairs(root, doc, latest)
+                    )
+                    if version_data_files(p)
+                ),
+                None,
+            )
+            if newest is not None:
+                base_types = {
+                    f.name: f.dataType
+                    for f in read_version_dir(
+                        df.sparkSession, newest
+                    ).schema.fields
+                }
                 from pyspark.sql.types import IntegralType
 
                 def _family(dt) -> str:
@@ -842,25 +799,21 @@ def _checkpoint_zero_copy(
         raise ConcurrentWriteError(
             f"table {root!r} no longer has v{base}; re-read and retry"
         )
-    paths = _resolve_version_paths(root, doc, base)
-    from openaq_data_pipeline_engineering_spark.operators.cow import (
-        partition_layout,
-    )
-
-    layouts = [partition_layout(p) for p in paths]
-    if any(lo is None for lo in layouts) or len(
-        {tuple(lo) for lo in layouts}
-    ) > 1:
+    pairs = _resolve_version_pairs(root, doc, base)
+    layout = chain_layout(root, base, doc)
+    if layout is None:
         # A Hive-partitioned directory (adopted via versionize_table)
         # keeps partition VALUES in subdirectory names; a chain mixing
         # flat and partitioned directories (or two different partition
         # column sequences) cannot merge into one directory without
         # silently dropping those columns — rewrite instead. A chain
         # whose directories SHARE one layout (all flat, or all
-        # partitioned the same way) links below at the same relative
-        # subpaths, values preserved.
+        # partitioned the same way) references its files below at
+        # their owners' relative subpaths, values preserved.
         return None
-    schemas = [s for s in (_dir_footer_schema(p) for p in paths) if s is not None]
+    schemas = [
+        s for s in (_dir_footer_schema(p) for _v, p in pairs) if s is not None
+    ]
     if schemas and any(not s.equals(schemas[0]) for s in schemas[1:]):
         return None  # evolved chain: one directory can't hold both schemas
     candidate = _claim_next_version(root)
@@ -888,7 +841,7 @@ def _checkpoint_zero_copy(
         # blocks retention the way a directory-granular drop would.
         entries: list[dict] = []
         seen: set[tuple[int, str]] = set()
-        for v, p in _resolve_version_pairs(root, doc, base):
+        for v, p in pairs:
             for abs_p, (owner, rel, size) in sorted(
                 version_entry_map(p, v).items()
             ):
@@ -904,7 +857,7 @@ def _checkpoint_zero_copy(
         schema_json = (
             read_snapshot(spark, root, version=base).schema.jsonValue()
         )
-        write_fileset(new_dir, list(layouts[0]), schema_json, entries)
+        write_fileset(new_dir, layout, schema_json, entries)
         if doc["cdf_keys"]:
             # A rebase is content-preserving: its change set is EMPTY
             # by construction — written as typed empty change files so
@@ -927,7 +880,7 @@ def _checkpoint_zero_copy(
             txn_id,
             expected_latest=base,
             validated_constraints=frozenset(doc["constraints"]),
-            layout=list(layouts[0]),
+            layout=layout,
         )
     except BaseException:
         shutil.rmtree(new_dir, ignore_errors=True)
@@ -1117,8 +1070,8 @@ def _commit_version(
             modes[version] = mode
         if layout is not None:
             # record the committed partition layout (VERDICT r11 #2):
-            # immutable per version, read back by cow_eligible_base /
-            # commit_file_rewrite instead of a per-statement file walk
+            # immutable per version, read back by version_layout /
+            # chain_layout instead of a per-statement file walk
             doc["layouts"][version] = list(layout)
         doc["versions"] = versions + [version]
         return doc, version
@@ -1170,63 +1123,31 @@ def read_snapshot(
     from openaq_data_pipeline_engineering_spark.operators.filesets import (
         is_fileset_dir,
         read_version_dir,
+        version_data_files,
     )
 
-    paths = _resolve_version_paths(root, doc, version)
+    paths = [p for _v, p in _resolve_version_pairs(root, doc, version)]
     if len(paths) == 1:
         return read_version_dir(spark, paths[0])
-    layouts = {
-        tuple(lo)
-        for lo in (_dir_layout_cheap(p) for p in paths)
-        if lo is not None
-    }
-    if any(is_fileset_dir(p) for p in paths):
-        # A fileset version in a CHAIN (a COW base under later deltas):
-        # its content resolves through its sidecar, so the multi-path
-        # parquet read below would silently see only its locally-owned
-        # files. Read each directory through the fileset-aware
-        # resolver and union by name — the same per-directory shape
-        # the partitioned-chain branch uses (allowMissingColumns is
-        # the mergeSchema null-backfill for evolved appends).
-        from openaq_data_pipeline_engineering_spark.operators.filesets import (
-            version_data_files,
-        )
-
+    if any(is_fileset_dir(p) for p in paths) or chain_layout(
+        root, version, doc
+    ):
+        # Read each directory on its own and union BY NAME
+        # (allowMissingColumns = the mergeSchema null-backfill for
+        # evolved appends). A fileset version in the chain (a COW base
+        # under later deltas) resolves through its sidecar, which a
+        # multi-path parquet read would miss. A PARTITIONED chain with
+        # one shared layout needs its own partition discovery per
+        # directory: a single multi-path read would either reject the
+        # layouts or, under a common basePath, misparse the v=N segment
+        # as a partition column. Directories with no data files (a
+        # partitionBy of zero rows writes none) contribute nothing.
+        # MIXED chains fall through to the plain multi-path read below,
+        # which surfaces Spark's loud CONFLICTING_DIRECTORY_STRUCTURES
+        # instead of silently normalizing the partitioned side's value
+        # spellings.
         parts = [
-            read_version_dir(spark, p)
-            for p in paths
-            if version_data_files(p)
-        ]
-        if not parts:
-            raise FileNotFoundError(
-                f"no data files in any directory of v={version} "
-                f"under {root!r}"
-            )
-        out = parts[0]
-        for q in parts[1:]:
-            out = out.unionByName(q, allowMissingColumns=True)
-        return out
-    if layouts != {()} and len(layouts) == 1:
-        # PARTITIONED chain, ONE shared layout (a partition_by base or
-        # adopted layout plus auto-partitioned deltas): a single
-        # multi-path read would either reject the layouts or, under a
-        # common basePath, misparse the v=N segment as a partition
-        # column — so read each directory with its OWN partition
-        # discovery and union BY NAME (allowMissingColumns = the
-        # mergeSchema null-backfill for evolved appends). Empty delta
-        # directories (a partitionBy of zero rows writes no files)
-        # contribute nothing and are skipped. MIXED chains fall through
-        # to the plain multi-path read below, which surfaces Spark's
-        # loud CONFLICTING_DIRECTORY_STRUCTURES instead of silently
-        # normalizing the partitioned side's value spellings.
-        from openaq_data_pipeline_engineering_spark.operators.compact import (
-            iter_data_parquet_files,
-        )
-
-        parts = [
-            spark.read.parquet(p)
-            for p in paths
-            if any(True for _ in iter_data_parquet_files(p))
+            read_version_dir(spark, p) for p in paths if version_data_files(p)
         ]
         if not parts:
             raise FileNotFoundError(
@@ -1320,10 +1241,12 @@ def _version_dir(root: str, version: int) -> str:
 def _resolve_version_pairs(
     root: str, doc: dict, version: int
 ) -> list[tuple[int, str]]:
-    """``(version, data directory)`` pairs whose union is ``version``'s
-    content — :func:`_resolve_version_paths` with the owning version
-    numbers kept (the fileset rebase needs them to attribute entries
-    to their original owners)."""
+    """``(owner version, data directory)`` pairs whose union is
+    ``version``'s content — chain resolution (delta → base + deltas)
+    with RESTORE commits expanded to their target's directories and
+    clone references resolved through ``base_root``. The owner numbers
+    key the manifest's per-version records (layouts) and attribute
+    fileset entries to their original owners."""
     pairs: list[tuple[int, str]] = []
     for v in _chain_versions(doc["versions"], doc["modes"], version):
         mode = doc["modes"].get(v, "full")
@@ -1338,23 +1261,79 @@ def _resolve_version_pairs(
     return pairs
 
 
-def _resolve_version_paths(
-    root: str, doc: dict, version: int
-) -> list[str]:
-    """Every data directory whose union is ``version``'s content —
-    chain resolution (delta → base + deltas) with RESTORE commits
-    expanded to their target's directories and clone references
-    resolved through ``base_root``."""
-    paths: list[str] = []
-    for v in _chain_versions(doc["versions"], doc["modes"], version):
-        mode = doc["modes"].get(v, "full")
-        if mode.startswith("restore:"):
-            paths.extend(
-                _resolve_version_paths(root, doc, int(mode.split(":", 1)[1]))
-            )
-        else:
-            paths.append(_version_dir(root, v))
-    return paths
+def _walk_layouts(vdir: str) -> set[tuple[str, ...] | None]:
+    """The partition-column sequences found among ``vdir``'s data
+    files (a FILESET version's entries count by their rel-within-owner
+    paths); None stands for data under a non-``key=value``
+    subdirectory. Empty for a directory with no data files."""
+    from openaq_data_pipeline_engineering_spark.operators.filesets import (
+        version_files_with_rels,
+    )
+
+    found: set[tuple[str, ...] | None] = set()
+    for _p, rel in version_files_with_rels(vdir):
+        segs = rel.split(os.sep)[:-1]
+        found.add(
+            None
+            if any("=" not in s for s in segs)
+            else tuple(s.split("=", 1)[0] for s in segs)
+        )
+    return found
+
+
+def _one_layout(found: set[tuple[str, ...] | None]) -> list[str] | None:
+    if None in found or len(found) > 1:
+        return None
+    return list(next(iter(found))) if found else []
+
+
+def partition_layout(vdir: str) -> list[str] | None:
+    """The Hive partition-column sequence shared by EVERY data file of
+    ``vdir`` (``[]`` = flat), or None when the layout is inconsistent —
+    a mix of flat and partitioned files, differing column sequences, or
+    data under non-``key=value`` subdirectories. A non-None layout is
+    exactly what the relative-path carry + ``partitionBy`` rewrite can
+    reproduce losslessly. This exact walk is how
+    :func:`versionize_table` first learns an adopted table's layout and
+    how :func:`version_layout` answers for versions the manifest holds
+    no layout for."""
+    return _one_layout(_walk_layouts(vdir))
+
+
+def version_layout(
+    root: str, v: int, doc: dict | None = None
+) -> list[str] | None:
+    """Partition layout of version ``v``'s own directory: the layout
+    its commit recorded in the manifest, else (a version committed
+    before layouts were recorded, or a mixed directory that
+    :func:`versionize_table` adopted) the exact walk of
+    :func:`partition_layout`. None means inconsistent."""
+    if doc is None:
+        doc = _read_manifest_doc(root)
+    recorded = doc["layouts"].get(v)
+    if recorded is not None:
+        return list(recorded)
+    return partition_layout(_version_dir(root, v))
+
+
+def chain_layout(
+    root: str, v: int, doc: dict | None = None
+) -> list[str] | None:
+    """The one partition layout shared by every directory version
+    ``v`` reads through (its delta chain, RESTORE targets expanded), or
+    None when they are mixed. A recorded layout always counts — an
+    empty partitioned append writes no files but records its layout;
+    an unrecorded directory counts by its walk, so one with no data
+    files constrains nothing. ``[]`` when the chain is flat."""
+    if doc is None:
+        doc = _read_manifest_doc(root)
+    found: set[tuple[str, ...] | None] = set()
+    for owner, d in _resolve_version_pairs(root, doc, v):
+        recorded = doc["layouts"].get(owner)
+        found |= (
+            {tuple(recorded)} if recorded is not None else _walk_layouts(d)
+        )
+    return _one_layout(found)
 
 
 def resolve_version_paths(root: str, version: int | None = None) -> list[str]:
@@ -1368,7 +1347,7 @@ def resolve_version_paths(root: str, version: int | None = None) -> list[str]:
     v = doc["versions"][-1] if version is None else version
     if v not in doc["versions"]:
         raise ValueError(f"version {v} not committed: {doc['versions']}")
-    return _resolve_version_paths(root, doc, v)
+    return [p for _v, p in _resolve_version_pairs(root, doc, v)]
 
 
 def snapshot_versions(root: str) -> list[int]:
@@ -1754,12 +1733,14 @@ def _prune_unreferenced_files(d: str, keep_rels: set[str]) -> None:
 
 # Diagnostics: last vacuum's REFCOUNT-AWARE freed-bytes per dropped
 # version (abspath(root) -> {"freed_bytes": {v: n}, "total_freed": n,
-# "still_referenced_bytes": n}). With COW/rebase/purge all carrying by
-# HARDLINK, deleting a version's directory frees an inode's bytes only
-# when the LAST name dies — a vacuum of a carried-from base usually
-# reclaims far less than the directory's apparent size (VERDICT r10
-# #5: operators should see that, not be surprised by it). Tests and
-# DESCRIBE-level reporting read this; no protocol decision does.
+# "still_referenced_bytes": n}). COW and the rebase carry files by
+# fileset entry (a file a surviving fileset references stays in
+# place), while purge_rows and materialize_fileset carry by HARDLINK:
+# deleting a version's directory frees a hardlinked inode's bytes only
+# when the LAST name dies, so a vacuum can reclaim far less than the
+# directory's apparent size (VERDICT r10 #5: operators should see
+# that, not be surprised by it). Tests and DESCRIBE-level reporting
+# read this; no protocol decision does.
 LAST_VACUUM_STATS: dict[str, dict] = {}
 
 
@@ -2501,14 +2482,10 @@ def versionize_table(root: str) -> int:
             f.write("versionize_table in progress")
     for e in _movable():
         os.rename(os.path.join(root, e), os.path.join(vdir, e))
-    from openaq_data_pipeline_engineering_spark.operators.cow import (
-        partition_layout as _pl,
-    )
-
     # record the adopted layout when it is consistent (None — a mixed
-    # adopted directory — stays unrecorded: DML falls back to the walk
-    # and then the full rewrite, exactly as before)
-    _commit_version(root, 1, layout=_pl(vdir))
+    # adopted directory — stays unrecorded: version_layout walks it
+    # and DML takes the full rewrite)
+    _commit_version(root, 1, layout=partition_layout(vdir))
     os.remove(marker)
     _heal_root_marker()
     return 1
@@ -2799,14 +2776,13 @@ def purge_rows(
             )
             from openaq_data_pipeline_engineering_spark.operators.cow import (
                 link_files_relative,
-                partition_layout,
                 touched_files_by_predicate,
             )
             from openaq_data_pipeline_engineering_spark.operators.filesets import (
                 read_version_subset,
             )
 
-            layout = partition_layout(path)
+            layout = version_layout(root, v, doc)
             # touched is None when the predicate is unsafe to evaluate
             # twice (non-deterministic / per-query-constant time
             # functions — exactly the retention-by-current_date() shape

@@ -169,9 +169,9 @@ class TestCowUpdateDelete:
 
     def test_delta_chain_base_rebases_then_cow(self, spark, tmp_path):
         """A DML statement on a table whose latest commit is an append
-        DELTA first zero-copy-rebases the chain (hardlink merge — no
-        data bytes) and then runs file-granular: the old behavior was a
-        FULL table rewrite."""
+        DELTA first zero-copy-rebases the chain (a fileset referencing
+        the chain's files — no data bytes) and then runs file-granular:
+        the old behavior was a FULL table rewrite."""
         from openaq_data_pipeline_engineering_spark.operators.versioned import (
             snapshot_modes,
         )

@@ -20,6 +20,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from openaq_data_pipeline_engineering_spark.engine import Engine
@@ -505,3 +506,61 @@ class TestPartitionedAppendComposes:
         assert out.count() == 30
         assert out.filter("k = 500").first()["score"] == -1.0
         assert out.filter("k = 500").first()["m"] == 1  # partition kept
+
+
+_EMPTY_APPEND_STATEMENTS = {
+    "update": "UPDATE '{root}' SET v = 'z' WHERE k = 5",
+    "optimize": "OPTIMIZE '{root}'",
+    "insert_overwrite": (
+        "INSERT OVERWRITE '{root}' SELECT k, v, m FROM empty_append_src"
+    ),
+}
+
+
+class TestEmptyAppendKeepsLayout:
+    @pytest.mark.parametrize("stmt", sorted(_EMPTY_APPEND_STATEMENTS))
+    def test_statement_after_empty_append_keeps_layout(
+        self, spark, tmp_path, stmt
+    ):
+        """An empty append onto a ``partition_by`` table writes no
+        files (a partitionBy of zero rows emits nothing) but records
+        the layout ["m"]. UPDATE, bare OPTIMIZE and INSERT OVERWRITE
+        must keep resolving the chain as partitioned: the empty delta
+        directory is not a flat one. Results equal a run without the
+        empty append."""
+        from openaq_data_pipeline_engineering_spark.operators.versioned import (
+            _read_manifest_doc,
+            append_rows,
+            write_snapshot,
+        )
+
+        df = spark.createDataFrame(
+            [(i, f"v{i}", i % 4) for i in range(40)],
+            "k long, v string, m int",
+        )
+        df.createOrReplaceTempView("empty_append_src")
+        rows = {}
+        for name, empty_append in (("plain", False), ("appended", True)):
+            root = str(tmp_path / name)
+            write_snapshot(df, root, partition_by=["m"])
+            if empty_append:
+                append_rows(df.limit(0), root)
+            Engine(spark).sql(
+                _EMPTY_APPEND_STATEMENTS[stmt].format(root=root)
+            ).first()
+            doc = _read_manifest_doc(root)
+            assert doc["layouts"].get(doc["versions"][-1]) == ["m"], name
+            if stmt == "update":
+                stats = last_cow_stats(root)
+                assert stats is not None, name
+                assert stats["files_rewritten"] == 1, name
+            rows[name] = sorted(
+                tuple(r)
+                for r in read_snapshot(spark, root)
+                .select("k", "v", "m")
+                .collect()
+            )
+        assert len(rows["plain"]) == 40
+        assert rows["appended"] == rows["plain"]
+        if stmt == "update":
+            assert ("z", 1) in {(v, m) for k, v, m in rows["plain"] if k == 5}

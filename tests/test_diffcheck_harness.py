@@ -42,3 +42,21 @@ def test_int_float_family_drift_detected():
 def test_row_order_is_irrelevant():
     assert compare("q", _f(k=[2, 1], v=[1.0, 2.0]),
                    _f(k=[1, 2], v=[2.0, 1.0])) == []
+
+
+def test_bad_arguments_exit_before_spark(tmp_path, monkeypatch, capsys):
+    # a missing scale dir (e.g. `--help` taken as one) or an unknown
+    # query name exits 2 with a usage line; Spark never starts
+    import diffcheck
+
+    from openaq_data_pipeline_engineering_spark import engine
+
+    def no_spark(*_a, **_k):
+        raise AssertionError("Spark started on bad arguments")
+
+    monkeypatch.setattr(engine, "get_spark", no_spark)
+    assert diffcheck.main(["--help"]) == 2
+    assert "usage:" in capsys.readouterr().err
+    assert diffcheck.main([str(tmp_path), "no_such_query"]) == 2
+    err = capsys.readouterr().err
+    assert "usage:" in err and "no_such_query" in err

@@ -276,3 +276,21 @@ def test_write_mart_replaces_only_its_partitions_on_a_static_session(
     got = _days(spark, out)
     assert got["01"] == {r for r in rows if r[6] == "01"}
     assert got["02"] == {_row("a", 2, 0, 9.0, "t2")}
+
+
+def test_optimize_rejects_a_mixed_layout(spark, tmp_path):
+    """Flat files beside key=value directories give no one layout to
+    rewrite through: OPTIMIZE refuses before reading and leaves the
+    table as it was."""
+    from openaq_data_pipeline_engineering_spark.operators.sqlutil import (
+        UtilStatementError,
+    )
+
+    out = str(tmp_path / "t")
+    df = spark.range(40).select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
+    df.write.partitionBy("p").parquet(out)
+    df.drop("p").write.mode("append").parquet(out)
+    before = sorted(os.listdir(out))
+    with pytest.raises(UtilStatementError, match="mixes partition layouts"):
+        Engine(spark).sql(f"OPTIMIZE '{out}'")
+    assert sorted(os.listdir(out)) == before

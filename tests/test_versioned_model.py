@@ -361,3 +361,104 @@ def test_clone_pins_survive_source_lifecycle(
     # (b) every surviving source version still reads per the model
     for v in order:
         assert _read_keys(spark, src, version=v) == model[v]
+
+
+class TestLayoutResolver:
+    """``version_layout`` / ``chain_layout``: the manifest's recorded
+    layout answers first; only versions without one are walked."""
+
+    @staticmethod
+    def _frame(spark):
+        return spark.createDataFrame(
+            [(i, i % 3) for i in range(12)], "k long, m int"
+        )
+
+    def test_recorded_layout_wins_for_an_empty_directory(
+        self, spark, tmp_path
+    ):
+        from openaq_data_pipeline_engineering_spark.operators.versioned import (
+            chain_layout,
+            partition_layout,
+            version_layout,
+        )
+
+        root = str(tmp_path / "t")
+        df = self._frame(spark)
+        write_snapshot(df, root, partition_by=["m"])
+        v2 = append_rows(df.limit(0), root)
+        # a partitionBy of zero rows writes no data files
+        assert partition_layout(f"{root}/v={v2}") == []
+        assert version_layout(root, v2) == ["m"]
+        assert chain_layout(root, v2) == ["m"]
+
+    def test_unrecorded_manifest_falls_back_to_the_walk(
+        self, spark, tmp_path
+    ):
+        import os
+
+        from openaq_data_pipeline_engineering_spark.operators.versioned import (
+            _read_manifest_doc,
+            _write_manifest,
+            chain_layout,
+            version_layout,
+        )
+
+        root = str(tmp_path / "t")
+        self._frame(spark).write.partitionBy("m").parquet(f"{root}/v=1")
+        os.makedirs(f"{root}/v=2")  # an empty delta
+        _write_manifest(root, [1, 2], modes={2: "delta"})
+        assert _read_manifest_doc(root)["layouts"] == {}
+        assert version_layout(root, 1) == ["m"]
+        assert version_layout(root, 2) == []
+        # an unrecorded directory with no data files constrains nothing
+        assert chain_layout(root, 2) == ["m"]
+
+    def test_unrecorded_mixed_directory_gives_none(self, spark, tmp_path):
+        import shutil
+
+        from openaq_data_pipeline_engineering_spark.operators.versioned import (
+            _read_manifest_doc,
+            chain_layout,
+            version_layout,
+            versionize_table,
+        )
+
+        root = str(tmp_path / "t")
+        df = self._frame(spark)
+        df.write.parquet(root)
+        df.write.partitionBy("m").parquet(str(tmp_path / "p"))
+        shutil.move(str(tmp_path / "p" / "m=1"), f"{root}/m=1")
+        versionize_table(root)
+        assert 1 not in _read_manifest_doc(root)["layouts"]
+        assert version_layout(root, 1) is None
+        assert chain_layout(root, 1) is None
+
+    def test_clone_inherits_recorded_layouts(self, spark, tmp_path):
+        from openaq_data_pipeline_engineering_spark.operators.versioned import (
+            _read_manifest_doc,
+            chain_layout,
+            clone_snapshot,
+            version_layout,
+        )
+
+        src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+        df = self._frame(spark)
+        write_snapshot(df, src, partition_by=["m"])
+        v2 = append_rows(df.limit(0), src)
+        clone_snapshot(src, dst)
+        assert _read_manifest_doc(dst)["layouts"] == {1: ["m"], v2: ["m"]}
+        assert version_layout(dst, 1) == ["m"]
+        assert chain_layout(dst, v2) == ["m"]
+
+    def test_restore_expands_to_its_targets_layout(self, spark, tmp_path):
+        from openaq_data_pipeline_engineering_spark.operators.versioned import (
+            chain_layout,
+        )
+
+        root = str(tmp_path / "t")
+        df = self._frame(spark)
+        v1 = write_snapshot(df, root, partition_by=["m"])
+        v2 = write_snapshot(df, root)
+        v3 = restore_snapshot(root, version=v1)
+        assert chain_layout(root, v2) == []
+        assert chain_layout(root, v3) == ["m"]

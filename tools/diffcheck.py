@@ -6,7 +6,9 @@ values (columns sorted by name, rows sorted, exact equality after type
 normalization). Stricter than any reasonable hash — if this passes, the
 driver's hash-match passes.
 
-Usage: python tools/diffcheck.py [sf_dir] [query ...]
+Usage: python tools/diffcheck.py [--json=<out>] [sf_dir] [query ...]
+Exits 2 without starting Spark when sf_dir does not exist or a named
+query is not registered.
 """
 
 from __future__ import annotations
@@ -83,8 +85,11 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[
     return problems
 
 
-def main() -> int:
-    args = list(sys.argv[1:])
+USAGE = "usage: python tools/diffcheck.py [--json=<out>] [sf_dir] [query ...]"
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = list(sys.argv[1:] if argv is None else argv)
     json_path = None
     for a in list(args):
         if a.startswith("--json="):
@@ -94,8 +99,22 @@ def main() -> int:
     only = set(args[1:])
     results: dict[str, dict] = {}
 
-    from openaq_data_pipeline_engineering_spark.engine import get_spark
     from openaq_data_pipeline_engineering_spark.plans.registry import get_oracles, get_queries
+
+    # Reject bad arguments before Spark starts: a missing scale dir
+    # would fail every query, and an unknown name would match none and
+    # still report 0 failures.
+    qs = get_queries()
+    problems = []
+    if not os.path.isdir(sf_dir):
+        problems.append(f"no such scale directory: {sf_dir}")
+    if only - set(qs):
+        problems.append(f"unknown queries: {', '.join(sorted(only - set(qs)))}")
+    if problems:
+        print("\n".join([USAGE, *problems]), file=sys.stderr)
+        return 2
+
+    from openaq_data_pipeline_engineering_spark.engine import get_spark
 
     # Layout knobs: a run at an unusual parallelism (e.g. CPUS=3,
     # SHUFFLE=5) is the layout-independence check — any query whose
@@ -111,7 +130,7 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs, oracles = get_queries(), get_oracles()
+    oracles = get_oracles()
     n_pass = n_fail = n_noracle = 0
     for name, fn in sorted(qs.items()):
         if only and name not in only:
