@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from openaq_data_pipeline_engineering_spark.operators.parse import quote
+
 # EPA-style breakpoints: pollutant -> [(c_lo, c_hi, i_lo, i_hi), ...].
 # (pm25 uses the 2024 EPA table shape the reference plan cites.)
 BREAKPOINTS: dict[str, list[tuple[float, float, float, float]]] = {
@@ -58,10 +60,6 @@ def _d(x: float) -> str:
     """A DOUBLE literal. A bare ``12.1`` parses as DECIMAL and would
     change the low bits of the interpolation."""
     return f"CAST({x!r} AS DOUBLE)"
-
-
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
 
 
 def piecewise_linear(
@@ -121,8 +119,8 @@ def compute_aqi(df: DataFrame, pollutant_cols: dict[str, str] | None = None) -> 
 
     # One CASE per pollutant, selected once as a named sub-index column.
     names = sorted(pollutant_cols)
-    sub = {n: _quote(f"__aqi_sub_{n}") for n in names}
-    conc = {n: f"CAST({_quote(pollutant_cols[n])} AS DOUBLE)" for n in names}
+    sub = {n: quote(f"__aqi_sub_{n}") for n in names}
+    conc = {n: f"CAST({quote(pollutant_cols[n])} AS DOUBLE)" for n in names}
     with_sub = df.selectExpr(
         "*",
         *[
@@ -149,7 +147,7 @@ def compute_aqi(df: DataFrame, pollutant_cols: dict[str, str] | None = None) -> 
     cols += [c for c in derived if c not in cols]
     return with_sub.selectExpr(
         *[
-            f"{derived[c]} AS {_quote(c)}" if c in derived else _quote(c)
+            f"{derived[c]} AS {quote(c)}" if c in derived else quote(c)
             for c in cols
         ]
     )

@@ -8,13 +8,61 @@ Reference semantics:
 - P5: drop rows whose datetime fails to parse
   (etls/openaq_etl.py:293-297 — pandas ``errors='coerce'`` + dropna).
 
-All pure Column expressions → whole-stage codegen, pushdown-friendly.
+All pure column expressions → whole-stage codegen, pushdown-friendly.
+This module owns their SQL text (:func:`datetime_sql`,
+:func:`valid_datetime_sql`, :func:`partition_columns_sql`); the
+DataFrame functions below and ``plans/mart.build_mart`` build from it.
+Text costs one Py4J round trip per ``selectExpr``; the same expressions
+composed from ``Column`` calls cost several per call (PySpark 4
+call-site capture).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+
+def quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def string_literal(value: str) -> str:
+    """``value`` as an escaped single-quoted SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def datetime_sql(col: str) -> str:
+    """ISO-8601 string column ``col`` (tz offsets included) as a UTC
+    timestamp; NULL where it does not parse."""
+    return f"try_cast({quote(col)} AS TIMESTAMP)"
+
+
+def valid_datetime_sql(col: str) -> str:
+    """True where the parsed datetime ``col`` is present."""
+    return f"{quote(col)} IS NOT NULL"
+
+
+def partition_columns_sql(ts_col: str) -> dict[str, str]:
+    """``year`` (string) and zero-padded ``month``/``day`` strings of the
+    timestamp column ``ts_col``, by output name."""
+    t = quote(ts_col)
+    return {
+        "year": f"CAST(year({t}) AS STRING)",
+        "month": f"lpad(CAST(month({t}) AS STRING), 2, '0')",
+        "day": f"lpad(CAST(dayofmonth({t}) AS STRING), 2, '0')",
+    }
+
+
+def with_sql_columns(df: DataFrame, derived: dict[str, str]) -> DataFrame:
+    """``df`` with each ``derived`` column (name → SQL text) replacing
+    the column of that name in place, or appended, like ``withColumn``,
+    in one ``selectExpr``."""
+    cols = df.columns
+    return df.selectExpr(
+        *[f"{derived[c]} AS {quote(c)}" if c in derived else quote(c) for c in cols],
+        *[f"{sql} AS {quote(c)}" for c, sql in derived.items() if c not in cols],
+    )
 
 
 def parse_datetime(df: DataFrame, col: str = "datetime", output_col: str | None = None) -> DataFrame:
@@ -25,13 +73,12 @@ def parse_datetime(df: DataFrame, col: str = "datetime", output_col: str | None 
     ``to_datetime(errors='coerce')`` contract the reference relies on.
     (Plain ``cast`` would throw under Spark 4's default ANSI mode.)
     """
-    out = output_col or col
-    return df.withColumn(out, F.col(col).try_cast("timestamp"))
+    return with_sql_columns(df, {output_col or col: datetime_sql(col)})
 
 
 def drop_invalid_datetime(df: DataFrame, col: str = "datetime") -> DataFrame:
     """Drop rows with NULL (unparseable) datetime — reference P5."""
-    return df.na.drop(subset=[col])
+    return df.where(valid_datetime_sql(col))
 
 
 def with_partition_columns(df: DataFrame, ts_col: str = "datetime") -> DataFrame:
@@ -44,9 +91,4 @@ def with_partition_columns(df: DataFrame, ts_col: str = "datetime") -> DataFrame
     invariant the reference tests assert
     (tests/test_glue_transformation.py:260-296).
     """
-    t = F.col(ts_col)
-    return (
-        df.withColumn("year", F.year(t).cast("string"))
-        .withColumn("month", F.lpad(F.month(t).cast("string"), 2, "0"))
-        .withColumn("day", F.lpad(F.dayofmonth(t).cast("string"), 2, "0"))
-    )
+    return with_sql_columns(df, partition_columns_sql(ts_col))

@@ -2725,13 +2725,22 @@ def purge_rows(
             return None, None
         return int(row["purged"] or 0), int(row["total"])
 
+    from openaq_data_pipeline_engineering_spark.operators.compact import (
+        iter_data_parquet_files,
+    )
+
     results: list[tuple[int, int, int]] = []
     for v in doc["versions"]:
         if doc["modes"].get(v, "full").startswith("restore:"):
             continue  # no data of its own
         path = os.path.join(root, f"v={v}")
-        df = spark.read.parquet(path)
-        n_purged, n_total = _match_and_total(df)
+        if any(True for _ in iter_data_parquet_files(path)):
+            df = spark.read.parquet(path)
+            n_purged, n_total = _match_and_total(df)
+        else:
+            # no data files (an empty append): zero rows, and nothing
+            # Spark could infer a schema from
+            df, n_purged, n_total = None, 0, 0
         # CDF change files (v=<N>/_changes, invisible to the
         # underscore-ignoring data read) hold the SAME rows as
         # pre/post-images — including pre-images of rows DELETED in
@@ -2771,9 +2780,6 @@ def purge_rows(
             # flat/partitioned layouts keep the whole-version rewrite
             # (which flattens partition columns into data columns —
             # content-preserving).
-            from openaq_data_pipeline_engineering_spark.operators.compact import (
-                iter_data_parquet_files,
-            )
             from openaq_data_pipeline_engineering_spark.operators.cow import (
                 link_files_relative,
                 touched_files_by_predicate,

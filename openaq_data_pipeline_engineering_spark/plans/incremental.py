@@ -8,27 +8,32 @@ a listed future item (doc/architecture.md:697).
 
 Spark-native replacement, no table format required:
 
-1. collect the (year, month, day) values the new batch touches on the
-   driver (a handful of rows) and read only those partitions of the
-   existing mart, by a static partition filter: the scan prunes them at
-   plan time and opens no file of any other partition;
-2. union existing + new, hash them on the partition columns, and
-   window-dedup with the batch's tiebreaker so a re-delivered or
-   corrected row wins deterministically — the dedup's window and the
-   write share that one exchange;
+1. cache the batch and run its plan once, observing on the way the
+   (year, month, day) values it touches (a handful of rows, on the
+   driver); then read only those partitions of the existing mart, by a
+   static partition filter: the scan prunes them at plan time and
+   opens no file of any other partition;
+2. union existing + the cached batch, hash them on the partition
+   columns, and window-dedup with the batch's tiebreaker so a
+   re-delivered or corrected row wins deterministically — the dedup's
+   window and the write share that one exchange;
 3. swap the merged partitions in (operators/compact.replace_partitions)
    — only the touched ones, each fully old or fully new after a crash;
    a crashed earlier swap is healed BEFORE step 1 reads the mart.
 
 Cost at 100 TB: proportional to the touched partitions (a day or two),
-never the whole table. With Delta/Iceberg the same logic is a MERGE; the
-operator keeps that seam (`merge_into_mart` is the single entry point).
+never the whole table. Step 1 costs one run of the batch plan. Its
+cache is proportional to the batch and is a Spark cache (memory and
+disk): a large batch spills to disk, and a lost block is recomputed
+from the batch's lineage. With Delta/Iceberg the same logic is a MERGE;
+the operator keeps that seam (`merge_into_mart` is the single entry
+point).
 """
 
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from openaq_data_pipeline_engineering_spark.operators.compact import (
@@ -36,13 +41,9 @@ from openaq_data_pipeline_engineering_spark.operators.compact import (
     replace_partitions,
 )
 from openaq_data_pipeline_engineering_spark.operators.dedup import dedup_first
+from openaq_data_pipeline_engineering_spark.operators.parse import quote, string_literal
 
 PARTITION_COLS = ["year", "month", "day"]
-
-
-def touched_partitions(batch: DataFrame) -> list[tuple]:
-    """Distinct (year, month, day) the batch writes into, on the driver."""
-    return [tuple(r) for r in batch.select(*PARTITION_COLS).distinct().collect()]
 
 
 def merged_partitions(
@@ -51,10 +52,13 @@ def merged_partitions(
     batch: DataFrame,
     keys: list[str],
     tiebreaker: list,
+    touched: list[tuple],
 ) -> DataFrame:
-    """The rows :func:`merge_into_mart` writes: the batch's touched
-    partitions of the mart at ``mart_path`` with ``batch`` merged in,
-    hash-partitioned on :data:`PARTITION_COLS` (arguments as there)."""
+    """The rows :func:`merge_into_mart` writes: the ``touched``
+    (year, month, day) partitions of the mart at ``mart_path`` with
+    ``batch`` merged in, hash-partitioned on :data:`PARTITION_COLS`
+    (the other arguments as there). ``touched`` must list every
+    partition ``batch`` has rows in."""
     keys = list(keys) + [c for c in PARTITION_COLS if c not in keys]
     merged = batch
     try:
@@ -71,16 +75,25 @@ def merged_partitions(
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
     else:
-        in_touched = F.lit(False)
-        for part in touched_partitions(batch):
-            in_part = F.lit(True)
-            for c, v in zip(PARTITION_COLS, part):
-                in_part &= F.col(c).eqNullSafe(v)
-            in_touched |= in_part
-        merged = existing.where(in_touched).unionByName(batch)
+        merged = existing.where(_partition_filter(touched)).unionByName(batch)
     return dedup_first(
         merged.repartition(*PARTITION_COLS), keys=keys, tiebreaker=tiebreaker
     )
+
+
+def _partition_filter(touched: list[tuple]) -> str:
+    """SQL text true on the rows of the ``touched`` partitions: a static
+    filter on the partition columns, which the scan prunes at plan time."""
+
+    def value(v) -> str:
+        # a string literal: Spark casts it to the partition column's type
+        return "NULL" if v is None else string_literal(str(v))
+
+    parts = [
+        " AND ".join(f"{quote(c)} <=> {value(v)}" for c, v in zip(PARTITION_COLS, p))
+        for p in touched
+    ]
+    return " OR ".join(f"({p})" for p in parts) or "false"
 
 
 def merge_into_mart(
@@ -115,8 +128,19 @@ def merge_into_mart(
     # heal BEFORE the read: a partition a crash left parked is not
     # listed, and its swap would replace it with batch-only rows
     _recover_interrupted_partition_rewrite(mart_path)
-    replace_partitions(
-        merged_partitions(spark, mart_path, batch, keys, tiebreaker),
-        mart_path,
-        PARTITION_COLS,
-    )
+    seen = Observation()
+    touched_set = F.collect_set(F.struct(*PARTITION_COLS)).alias("touched")
+    cached = batch.observe(seen, touched_set).persist()
+    try:
+        # One action fills the cache and the observation. Under AQE a
+        # fresh cache is filled by a job of its own, and a noop write
+        # adds one job after it where count() adds two.
+        cached.write.format("noop").mode("overwrite").save()
+        touched = [tuple(p) for p in seen.get["touched"]]
+        replace_partitions(
+            merged_partitions(spark, mart_path, cached, keys, tiebreaker, touched),
+            mart_path,
+            PARTITION_COLS,
+        )
+    finally:
+        cached.unpersist()

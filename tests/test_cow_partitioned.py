@@ -393,6 +393,29 @@ class TestPartitionedPurge:
         # partition values intact for every surviving row
         assert out.filter("m NOT IN (1, 2, 3)").count() == 0
 
+    def test_purge_across_a_version_without_data_files(self, spark, tmp_path):
+        """An empty append onto a partitioned table commits a version
+        directory holding no data files. The purge counts it as zero
+        rows instead of failing to infer its schema."""
+        from openaq_data_pipeline_engineering_spark.operators.versioned import (
+            append_rows,
+            purge_rows,
+            write_snapshot,
+        )
+
+        root = str(tmp_path / "empty_append")
+        df = spark.createDataFrame(
+            [(i, (i % 4) + 1, float(i)) for i in range(40)],
+            "k long, m int, score double",
+        )
+        write_snapshot(df, root, partition_by=["m"])
+        append_rows(df.limit(0), root)
+        purge_rows(spark, root, "k = 5", orphan_min_age_seconds=0)
+        for version in (None, 1):
+            out = read_snapshot(spark, root, version=version)
+            assert out.count() == 39
+            assert out.filter("k = 5").count() == 0
+
 
 class TestNativePartitionedWrites:
     def test_write_snapshot_partition_by(self, spark, tmp_path):

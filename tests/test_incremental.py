@@ -115,9 +115,51 @@ def test_read_failure_raises_and_leaves_mart_unchanged(spark, tmp_path, monkeypa
     def unreadable(self, *paths, **options):
         raise OSError("injected: mart unreadable")
 
+    persisted = _persisted(spark)
     monkeypatch.setattr(DataFrameReader, "parquet", unreadable)
     with pytest.raises(OSError, match="injected"):
         merge_into_mart(spark, path, batch, KEYS, _tie())
     monkeypatch.undo()
     assert _files(path) == before
     assert spark.read.parquet(path).count() == 2
+    assert _persisted(spark) == persisted  # the batch cache is released
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_merge_runs_the_batch_once_and_releases_its_cache(spark, tmp_path):
+    """The batch's plan runs once: it is cached while one action
+    observes the partitions it touches, and the write reads the cache.
+    Into a two-day mart, with a batch hashed on its key the way
+    build_mart's output is, the merge runs at most 5 Spark jobs: 2 for
+    the batch plan, 1 for the action, 2 for the write. Collecting the
+    touched partitions and then writing ran the batch plan twice, in
+    6 jobs."""
+    import os
+
+    path = str(tmp_path / "mart4")
+    merge_into_mart(
+        spark, path,
+        _batch(spark, [_row("a", 1, 10, 1.0, "t1"), _row("a", 2, 10, 2.0, "t1")]),
+        KEYS, _tie(),
+    )
+    persisted = _persisted(spark)
+    batch = _batch(
+        spark, [_row("a", 2, 10, 5.0, "t2"), _row("b", 1, 11, 6.0, "t2")]
+    ).repartition("location_id")
+    sc = spark.sparkContext
+    group = f"merge-job-budget-{os.getpid()}"
+    sc.setJobGroup(group, "merge job budget")
+    try:
+        merge_into_mart(spark, path, batch, KEYS, _tie())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 5
+    assert _persisted(spark) == persisted
+    back = spark.read.schema(SCHEMA).parquet(path)
+    assert sorted((r.location_id, r.day, r.pm25) for r in back.collect()) == [
+        ("a", "01", 1.0), ("a", "02", 5.0), ("b", "01", 6.0),
+    ]

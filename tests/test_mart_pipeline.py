@@ -217,8 +217,37 @@ def test_merge_reads_only_touched_partitions(spark, tmp_path):
     write_mart(mart.union(mart.withColumn("day", F.lit("21"))), out)
     assert len(os.listdir(os.path.join(out, "year=2025", "month=12"))) == 2
     batch = mart.where("location_id = 'loc1'")  # day 20 only
+    touched = [("2025", "12", "20")]
     _n, nodes = execute_with_metrics(
-        merged_partitions(spark, out, batch, ["location_id", "datetime"], ["pm25"])
+        merged_partitions(
+            spark, out, batch, ["location_id", "datetime"], ["pm25"], touched
+        )
     )
     scans = [nm.metrics for nm in nodes if nm.node.startswith("Scan parquet")]
     assert [m["number of partitions read"] for m in scans] == [1]
+
+
+def test_build_mart_makes_few_jvm_calls(spark):
+    """Building the mart DataFrame (no action) stays within ~150 Py4J
+    round trips. Composed from Column calls and withColumn it took
+    ~1k, ~0.2 s per build before Spark ran anything."""
+    import gc
+
+    raw, cfg = measurements(spark), MartConfig(tiebreaker=["value"])
+    build_mart(raw, cfg)  # first use imports and caches outside the count
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    gc.disable()  # no Py4J object deletes mid-count
+    client.send_command = counting
+    try:
+        build_mart(raw, cfg)
+    finally:
+        del client.send_command
+        gc.enable()
+    assert 0 < len(calls) <= 150
