@@ -9,10 +9,9 @@ Reference semantics:
   (etls/openaq_etl.py:293-297 — pandas ``errors='coerce'`` + dropna).
 
 All pure column expressions → whole-stage codegen, pushdown-friendly.
-This module owns their SQL text (:func:`datetime_sql`,
-:func:`valid_datetime_sql`, :func:`partition_columns_sql`); the
-DataFrame functions below and ``plans/mart.build_mart`` build from it.
-Text costs one Py4J round trip per ``selectExpr``; the same expressions
+This module owns their SQL text; ``plans/mart.build_mart`` builds from
+it (the parse operators, and :func:`partition_columns_sql` after its
+aggregate). Text costs one Py4J round trip per ``selectExpr``; the same expressions
 composed from ``Column`` calls cost several per call (PySpark 4
 call-site capture).
 """
@@ -30,17 +29,6 @@ def quote(name: str) -> str:
 def string_literal(value: str) -> str:
     """``value`` as an escaped single-quoted SQL string literal."""
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def datetime_sql(col: str) -> str:
-    """ISO-8601 string column ``col`` (tz offsets included) as a UTC
-    timestamp; NULL where it does not parse."""
-    return f"try_cast({quote(col)} AS TIMESTAMP)"
-
-
-def valid_datetime_sql(col: str) -> str:
-    """True where the parsed datetime ``col`` is present."""
-    return f"{quote(col)} IS NOT NULL"
 
 
 def partition_columns_sql(ts_col: str) -> dict[str, str]:
@@ -73,12 +61,13 @@ def parse_datetime(df: DataFrame, col: str = "datetime", output_col: str | None 
     ``to_datetime(errors='coerce')`` contract the reference relies on.
     (Plain ``cast`` would throw under Spark 4's default ANSI mode.)
     """
-    return with_sql_columns(df, {output_col or col: datetime_sql(col)})
+    parsed = f"try_cast({quote(col)} AS TIMESTAMP)"
+    return with_sql_columns(df, {output_col or col: parsed})
 
 
 def drop_invalid_datetime(df: DataFrame, col: str = "datetime") -> DataFrame:
     """Drop rows with NULL (unparseable) datetime — reference P5."""
-    return df.where(valid_datetime_sql(col))
+    return df.where(f"{quote(col)} IS NOT NULL")
 
 
 def with_partition_columns(df: DataFrame, ts_col: str = "datetime") -> DataFrame:
